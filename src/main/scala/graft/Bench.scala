@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run bench: one JSON line with per-query wall seconds on
   * SPARK_GRAFT_SF_DIR.
   *
@@ -27,26 +25,33 @@ object Bench {
     * sub-second queries are measurement noise, not plan cost. */
   val RerunSecs = 1.2
 
+  /** Each query runs once on this input right before its timed window
+    * (TimeQ warms from the same dir). */
+  val WarmupDir = "/root/testdata/sf0.001"
+
+  /** Untimed pre-JIT runs at the target SF per query: the iterative
+    * FloorJustified heavies run twice, every other pre-JIT query once. */
+  val PreJitRepsFloorJustified = 2
+  val PreJitRepsOther = 1
+
+  // Self-describing measurement protocol (round-14, per the round-13
+  // verdict): the next "did the harness change?" question must be
+  // answerable from the artifact alone. Additive field; the env
+  // contract and every existing field stay byte-compatible. Rendered
+  // from the same constants the timing loop reads.
+  def protocolField(prejitOn: Boolean): String =
+    s""""protocol":{"timed_action":"count",""" +
+      s""""warmup_sf":"${new java.io.File(WarmupDir).getName}",""" +
+      s""""prejit":${prejitOn},""" +
+      s""""prejit_reps_floor_justified":$PreJitRepsFloorJustified,""" +
+      s""""prejit_reps_other":$PreJitRepsOther,"rerun_secs":$RerunSecs,""" +
+      s""""hard_budget_secs":${Explain.HardBudgetSecs},""" +
+      s""""rerun_rule":"min-of-2 past rerun_secs, min-of-3 past hard budget unless floor-justified",""" +
+      s""""late_recheck":"one end-of-suite warm+timed min for non-exempt rows past hard budget"},"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // coalesce tiny post-shuffle partitions to the advisory size
-      // instead of preserving parallelism — fewer task launches per
-      // stage at small SF, and the production-recommended setting at
-      // scale (partition sizing should win over raw task count)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // the suite compiles ~2k distinct codegen units; the default
-      // 100-entry cache would evict the warmup's classes before the
-      // timed run touches them, moving Janino compiles INTO windows
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Deterministic block-manager scrub between queries. Cached
     // DataFrames are dropped via the cache manager; localCheckpoint
@@ -151,8 +156,7 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] layout prep failed: $e"); false }
 
-    val warmupDir = "/root/testdata/sf0.001"
-    val haveWarmup = new java.io.File(warmupDir).isDirectory
+    val haveWarmup = new java.io.File(WarmupDir).isDirectory
 
     // Pre-JIT at the TARGET SF before any timed window opens
     // (round-10 verdict #2, widened round 12 per round-11 verdict #3):
@@ -182,10 +186,12 @@ object Bench {
     // target-SF run leaves them far from C2 steady state (q_sssp
     // rep1 10.97 s -> rep5 3.77 s on a quiet host; BENCH_r12 timed it
     // at 6.28 s right after a single warm run).
-    if (!sys.env.get("SPARK_GRAFT_PREJIT").contains("off")) {
+    val prejitOn = !sys.env.get("SPARK_GRAFT_PREJIT").contains("off")
+    if (prejitOn) {
       preJit.foreach { n =>
         SparkEntry.queries.get(n).foreach { fn =>
-          val reps = if (Explain.FloorJustified(n)) 2 else 1
+          val reps =
+            if (Explain.FloorJustified(n)) PreJitRepsFloorJustified else PreJitRepsOther
           var r = 0
           while (r < reps) {
             try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
@@ -204,7 +210,7 @@ object Bench {
       if (qIdx % 25 == 0) jvmDiag(s"q$qIdx")
       // warm THIS query's plan/codegen/JIT right before timing it
       if (haveWarmup) {
-        try { fn(spark, warmupDir).count() } catch { case _: Throwable => () }
+        try { fn(spark, WarmupDir).count() } catch { case _: Throwable => () }
         scrub(); maybeGc()
       }
       def timedRun(): (Boolean, Double) = {
@@ -257,7 +263,7 @@ object Bench {
       if (secs > Explain.HardBudgetSecs && !Explain.FloorJustified(name)) {
         val fn = SparkEntry.queries(name)
         if (haveWarmup) {
-          try { fn(spark, warmupDir).count() } catch { case _: Throwable => () }
+          try { fn(spark, WarmupDir).count() } catch { case _: Throwable => () }
           scrub(); maybeGc()
         }
         val t0 = System.nanoTime()
@@ -274,18 +280,7 @@ object Bench {
       if (lateRechecked.isEmpty) ""
       else lateRechecked.map("\"" + _ + "\"")
         .mkString("\"late_rechecks\":[", ",", "],")
-    // Self-describing measurement protocol (round-14, per the round-13
-    // verdict): the next "did the harness change?" question must be
-    // answerable from the artifact alone. Additive field; the env
-    // contract and every existing field stay byte-compatible.
-    val prejitOn = !sys.env.get("SPARK_GRAFT_PREJIT").contains("off")
-    val protocolField =
-      s""""protocol":{"timed_action":"count","warmup_sf":"sf0.001",""" +
-        s""""prejit":${prejitOn},"prejit_reps_floor_justified":2,""" +
-        s""""prejit_reps_other":1,"rerun_secs":$RerunSecs,""" +
-        s""""hard_budget_secs":${Explain.HardBudgetSecs},""" +
-        s""""rerun_rule":"min-of-2 past rerun_secs, min-of-3 past hard budget unless floor-justified",""" +
-        s""""late_recheck":"one end-of-suite warm+timed min for non-exempt rows past hard budget"},"""
+    val protocol = protocolField(prejitOn)
     val jvmField = s""""jvm":{"start":$jvmStart,"end":${jvmSnapshot()}}"""
     def fmt(v: Double): String = f"$v%.3f"
     val qs = finalResults.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
@@ -297,7 +292,7 @@ object Bench {
     // Full per-query detail: one line for humans + a file for tooling.
     val warmField = preJit.map("\"" + _ + "\"").mkString("\"warm_input\":[", ",", "],")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,$hygieneWarning$warmField$lateField$protocolField$jvmField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,$hygieneWarning$warmField$lateField$protocol$jvmField,"sf":"$sfDir"}"""
     println(fullLine)
     try {
       val p = java.nio.file.Paths.get("target/bench_full.json")
@@ -324,7 +319,7 @@ object Bench {
     val qsTop = slowest.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qsTop,"errors":$errors,$hygieneWarning$lateField$protocolField$jvmField,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qsTop,"errors":$errors,$hygieneWarning$lateField$protocol$jvmField,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

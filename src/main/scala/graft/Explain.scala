@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries so plan
   * quality (pushdown, pruning, broadcast, codegen spans) is reviewable.
   * Usage: runMain graft.Explain [queryName ...]  (default: a survey set) */
@@ -197,14 +195,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     if (args.headOption.contains("--audit")) {
       // one-line plan-quality audit per query: the scale signals a
       // reviewer greps for, tabulated across the whole contract.

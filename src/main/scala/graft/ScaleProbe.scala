@@ -11,7 +11,9 @@ import graft.sources.OrderGen
   * the local stand-in for "would this hold at 100 TB": everything here
   * must scale linearly with rows and shuffle only fixed-size state.
   * Usage: runMain graft.ScaleProbe [rows]
-  *      | runMain graft.ScaleProbe --floors [edges]
+  *      | runMain graft.ScaleProbe --floors [edges] [kernel]
+  *      | runMain graft.ScaleProbe --codecs|--media|--kernels [base] [m1,m2,...]
+  * Every mode runs on one [[GraftSession]] (Bench's engine settings).
   *
   * `--floors` backs [[Explain.FloorJustified]]: it runs each inherently
   * iterative kernel (Bellman-Ford SSSP, min-label dup clustering,
@@ -448,91 +450,9 @@ object ScaleProbe {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--codecs")) {
-      val blobs = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
-      val mults = args.drop(2).headOption
-        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
-      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
-        s"multipliers must be ascending and >= 1, got $mults")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      codecsMode(spark, blobs, mults, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--media")) {
-      val blobs = args.drop(1).headOption.map(_.toLong).getOrElse(20000L)
-      val mults = args.drop(2).headOption
-        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
-      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
-        s"multipliers must be ascending and >= 1, got $mults")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      mediaMode(spark, blobs, mults, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--kernels")) {
-      val rows = args.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
-      val mults = args.drop(2).headOption
-        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
-      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
-        s"multipliers must be ascending and >= 1, got $mults")
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      kernelsMode(spark, rows, mults)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("--floors")) {
-      val edges = args.drop(1).headOption.filter(_.forall(_.isDigit))
-        .map(_.toLong).getOrElse(200000L)
-      val only = args.drop(1).find(!_.forall(_.isDigit))
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      floorsMode(spark, edges, only)
-      spark.stop()
-      return
-    }
-    val rows = if (args.nonEmpty) args(0).toLong else 5000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+  /** The default mode: the order/route/codec/text operator paths at
+    * `rows` generated orders. */
+  private def ordersMode(spark: SparkSession, rows: Long, cpus: Int): Unit = {
     def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -553,7 +473,7 @@ object ScaleProbe {
     timed("two-pass prefix sum") {
       ScalablePrefix.runningSum(spark,
         gen.select(col("seq").as("k"), Analytics.cents(col("price")).as("v")),
-        "k", "v", numPartitions = cpus.toInt * 4)
+        "k", "v", numPartitions = cpus * 4)
         .agg(max(col("run_sum"))).collect()
     }
     timed("codec encode+decode (500k)") {
@@ -611,7 +531,7 @@ object ScaleProbe {
       spark.range(rows).select(
           (col("id") % 4096).as("x"), ((col("id") * 31) % 4096).as("y"))
         .withColumn("z", graft.functions.kernels.zorder2(col("x"), col("y")))
-        .repartitionByRange(cpus.toInt * 4, col("z"))
+        .repartitionByRange(cpus * 4, col("z"))
         .agg(count(lit(1))).collect()
     }
     timed(s"interval bucket-join ($rows intervals)") {
@@ -634,7 +554,7 @@ object ScaleProbe {
       ScalablePrefix.groupedRank(spark,
         spark.range(rows).select((col("id") % 5).cast("string").as("g"),
           ((col("id") * 37) % 1000003).cast("double").as("v"), col("id").as("k")),
-        "g", "v", "k", numPartitions = cpus.toInt * 4)
+        "g", "v", "k", numPartitions = cpus * 4)
         .agg(max(col("rnk"))).collect()
     }
     timed(s"star-contraction CC (${rows / 10}-edge chain)") {
@@ -663,6 +583,37 @@ object ScaleProbe {
             (col("doc_id") % 480 + 16).cast("int"))).as("d"))
         .filter(col("d").isNotNull).count()
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cpus = GraftSession.cpus
+    // the 1×/10× modes: `--mode [base] [m1,m2,...]`
+    def scaled(defaultBase: Long): (Long, Seq[Long]) = {
+      val base = args.drop(1).headOption.map(_.toLong).getOrElse(defaultBase)
+      val mults = args.drop(2).headOption
+        .map(_.split(",").toSeq.map(_.trim.toLong)).getOrElse(Seq(1L, 10L))
+      require(mults.nonEmpty && mults == mults.sorted && mults.head >= 1,
+        s"multipliers must be ascending and >= 1, got $mults")
+      (base, mults)
+    }
+    val mode: SparkSession => Unit = args.headOption match {
+      case Some("--codecs") =>
+        val (blobs, mults) = scaled(20000L); codecsMode(_, blobs, mults, cpus)
+      case Some("--media") =>
+        val (blobs, mults) = scaled(20000L); mediaMode(_, blobs, mults, cpus)
+      case Some("--kernels") =>
+        val (rows, mults) = scaled(2000000L); kernelsMode(_, rows, mults)
+      case Some("--floors") =>
+        val edges = args.drop(1).headOption.filter(_.forall(_.isDigit))
+          .map(_.toLong).getOrElse(200000L)
+        val only = args.drop(1).find(!_.forall(_.isDigit))
+        floorsMode(_, edges, only)
+      case _ =>
+        val rows = if (args.nonEmpty) args(0).toLong else 5000000L
+        ordersMode(_, rows, cpus)
+    }
+    val spark = GraftSession.local()
+    mode(spark)
     spark.stop()
   }
 }

@@ -1,28 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual queries (steady-state, N reps) so a
   * perf change can be measured in isolation instead of re-running the
-  * whole bench. Usage: runMain graft.TimeQ q_pagerank [q_x ...] */
+  * whole bench, on Bench's session settings and warmup input.
+  * Usage: runMain graft.TimeQ q_pagerank [q_x ...] */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val names = if (args.nonEmpty) args.toSeq else Seq("q1_pricing_summary")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
-      fn(spark, "/root/testdata/sf0.001").count() // plan/codegen warmup
+      fn(spark, Bench.WarmupDir).count() // plan/codegen warmup
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()

@@ -299,14 +299,11 @@ object AvroOcf {
     out.toByteArray
   }
 
-  /** RAW datum bytes -> InternalRow. Throws on malformed input; callers
-    * choose null-on-error (PERMISSIVE). */
-  def decodeDatumRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow = {
-    val dec = org.apache.avro.io.DecoderFactory.get()
-      .binaryDecoder(bytes, 0, bytes.length, null)
-    val rec = new GenericDatumReader[GenericRecord](readerSchema).read(null, dec)
-    recordToRow(rec, sparkType, readerSchema)
-  }
+  /** RAW datum bytes -> InternalRow, written with the reader schema
+    * itself (Avro's one-schema reader is writer = reader). Throws on
+    * malformed input; callers choose null-on-error (PERMISSIVE). */
+  def decodeDatumRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow =
+    decodeDatumRowResolved(bytes, 0, sparkType, readerSchema, readerSchema)
 
   /** Datum bytes at an offset, resolved from a WRITER schema through a
     * READER schema (Avro spec schema resolution — the Confluent wire
@@ -348,17 +345,12 @@ object AvroOcf {
 
   def encodeRow(row: InternalRow, sparkType: StructType, schema: Schema,
       hs: (Array[Byte], Array[Byte])): Array[Byte] = {
-    val rec = toRecord(row, sparkType, schema)
     // fast path equivalent to DataFileWriter.create+append+close with a
     // fixed sync marker: cached header ++ one data block
     // (zigzag-varint count=1, size, datum bytes, sync) — byte-identical
     // output, verified against the DataFileWriter form in tests
     val (header, sync) = hs
-    val datumOut = new ByteArrayOutputStream(64)
-    val enc = org.apache.avro.io.EncoderFactory.get().directBinaryEncoder(datumOut, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    val datum = datumOut.toByteArray
+    val datum = encodeDatumRow(row, sparkType, schema)
     val out = new ByteArrayOutputStream(header.length + datum.length + 24)
     out.write(header)
     val blockEnc = org.apache.avro.io.EncoderFactory.get().directBinaryEncoder(out, null)

@@ -8,6 +8,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.util.control.NonFatal
+
 /** VP8 (lossy WebP) KEY-FRAME pixel decoder — RFC 6386, the still-image
   * subset (a lossy WebP file is exactly one VP8 key frame, so intra
   * prediction + transforms + loop filter are the complete decode; no
@@ -34,9 +36,6 @@ object Vp8 {
   final case class Yuv(width: Int, height: Int,
       y: Array[Byte], u: Array[Byte], v: Array[Byte],
       alpha: Array[Byte] = null) // ALPH plane (w*h) or null
-
-  /** Dev-only header trace (Vp8Debug flips it; never set in queries). */
-  private[graft] var DebugHeaders = false
 
   // ---------------------------------------------------------------- bool
 
@@ -184,12 +183,10 @@ object Vp8 {
     val hasCoeffs = new Array[Boolean](mbW * mbH)
   }
 
-  /** Full key-frame decode -> YUV420 planes, or None on malformation.
-    * `skipFilter` bypasses the loop filter — a debug/bisection seam
-    * (localizes a divergence to reconstruction vs filtering). */
-  def decode(data: Array[Byte], skipFilter: Boolean = false): Option[Yuv] = {
-    try decodeInner(data, skipFilter)
-    catch { case _: Throwable => None }
+  /** Full key-frame decode -> YUV420 planes, or None on malformation. */
+  def decode(data: Array[Byte]): Option[Yuv] = {
+    try decodeInner(data)
+    catch { case NonFatal(_) => None }
   }
 
   /** RIFF/WEBP unwrap: simple 'VP8 ' lossy payload, or the extended
@@ -268,7 +265,7 @@ object Vp8 {
     Some(raw)
   }
 
-  private def decodeInner(d: Array[Byte], skipFilter: Boolean): Option[Yuv] = {
+  private def decodeInner(d: Array[Byte]): Option[Yuv] = {
     if (d == null || d.length < 10) return None
     // §9.1 uncompressed frame tag (3 bytes LE)
     val tag = (d(0) & 0xff) | ((d(1) & 0xff) << 8) | ((d(2) & 0xff) << 16)
@@ -370,15 +367,6 @@ object Vp8 {
     hdr.skipEnabled = br.bool(128) == 1
     if (hdr.skipEnabled) hdr.skipProb = br.literal(8)
     if (br.overread > 2) return None
-    if (DebugHeaders) println(
-      s"[vp8hdr] ${hdr.w}x${hdr.h} seg=${hdr.segEnabled}/${hdr.segUpdateMap}" +
-        s"/abs=${hdr.segAbs} q=${hdr.segQuant.mkString(",")}" +
-        s" lf=${hdr.segLf.mkString(",")} treeP=${hdr.segTreeProbs.mkString(",")}" +
-        s" filt=${hdr.filterType}/${hdr.filterLevel}/${hdr.sharpness}" +
-        s" lfd=${hdr.lfDeltaEnabled} ref=${hdr.refLfDelta.mkString(",")}" +
-        s" mode=${hdr.modeLfDelta.mkString(",")} parts=$nParts yac=${hdr.yacQi}" +
-        s" d=${hdr.ydcDelta},${hdr.y2dcDelta},${hdr.y2acDelta}," +
-        s"${hdr.uvdcDelta},${hdr.uvacDelta} skip=${hdr.skipEnabled}/${hdr.skipProb}")
 
     // §11 per-MB prediction records (all in partition 0, raster order)
     val mb = new MbInfo(hdr.mbW, hdr.mbH)
@@ -419,11 +407,6 @@ object Vp8 {
           while (k < 4) { aboveB(mbX * 4 + k) = imp; leftB(k) = imp; k += 1 }
         }
         mb.uvMode(idx) = br.tree(UvModeTree, KfUvModeProb, 0).toByte
-        if (DebugHeaders) println(s"[vp8mb] ($mbX,$mbY) seg=${mb.segment(idx)} " +
-          s"skip=${mb.skip(idx)} y=${mb.yMode(idx)} uv=${mb.uvMode(idx)}" +
-          (if (mb.yMode(idx) == 4)
-            " b=" + (0 until 16).map(k => mb.bModes(idx * 16 + k)).mkString(",")
-          else ""))
         mbX += 1
       }
       mbY += 1
@@ -556,7 +539,7 @@ object Vp8 {
     }
 
     // §15 loop filter over the reconstructed (uncropped) frame
-    if (hdr.filterLevel > 0 && !skipFilter) loopFilter(hdr, mb, Y, U, V, pw, ph, cw, ch)
+    if (hdr.filterLevel > 0) loopFilter(hdr, mb, Y, U, V, pw, ph, cw, ch)
 
     // crop to the declared dimensions
     val yOut = new Array[Byte](w * h)
@@ -886,12 +869,6 @@ object Vp8 {
       while (b < 16) {
         val bx = mbX * 4 + (b & 3); val by = mbY * 4 + (b >> 2)
         predB(Y, pw, bx, by, mb.bModes(idx * 16 + b).toInt, y0 - 1, pw)
-        if (DebugHeaders && mbX == 0 && mbY == 0) {
-          val pr = (0 until 4).map(r => (0 until 4)
-            .map(c => Y((by * 4 + r) * pw + bx * 4 + c)).mkString(",")).mkString(" | ")
-          println(s"[vp8blk] b=$b mode=${mb.bModes(idx * 16 + b)} pred: $pr " +
-            s"coef: ${(0 until 16).map(k => coeffs(b * 16 + k)).mkString(",")}")
-        }
         if (!mb.skip(idx)) idctAdd(coeffs, b * 16, Y, pw, bx * 4, by * 4)
         b += 1
       }

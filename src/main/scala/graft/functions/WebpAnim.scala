@@ -8,6 +8,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.util.control.NonFatal
+
 /** Animated-WebP FRAME pixel decode (round-13) — upgrades the round-12
   * envelope walk (`q_webp_anim`, counts and durations only) to real
   * per-frame decoding: each ANMF sub-frame carries a complete VP8 or
@@ -51,7 +53,7 @@ object WebpAnim {
 
   def frames(data: Array[Byte]): Option[Seq[Frame]] = {
     try framesInner(data)
-    catch { case _: Throwable => None }
+    catch { case NonFatal(_) => None }
   }
 
   private def framesInner(d: Array[Byte]): Option[Seq[Frame]] = {

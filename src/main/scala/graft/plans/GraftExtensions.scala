@@ -74,7 +74,7 @@ object CodecRoundTripElimination extends Rule[LogicalPlan] {
   * round-trip elimination rule, and the native as-of join planner
   * strategy. Activate with
   * `spark.sql.extensions=graft.plans.GraftExtensions` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`. */
+  * `GraftSession.builder(cpus).withExtensions(new GraftExtensions)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CodecRoundTripElimination)

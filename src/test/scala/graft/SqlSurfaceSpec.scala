@@ -16,14 +16,10 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // withExtensions takes effect
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
+    GraftSession.builder(2)
       .appName("sql-surface")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
-    s
   }
 
   private def one[T](q: String): T =
