@@ -23,7 +23,6 @@ case class FromAvroOcf(child: Expression, schemaJson: String)
     extends UnaryExpression with CodegenFallback {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = AvroOcf.sparkTypeFor(avroSchema)
-  @transient private lazy val hs = AvroOcf.headerAndSync(avroSchema)
 
   override def dataType: DataType = structType
   override def nullable: Boolean = true
@@ -33,7 +32,7 @@ case class FromAvroOcf(child: Expression, schemaJson: String)
       s"from_avro_ocf expects binary input, got $other")
   }
   override def nullSafeEval(input: Any): Any =
-    try AvroOcf.decodeRow(input.asInstanceOf[Array[Byte]], structType, avroSchema, hs)
+    try AvroOcf.decodeRow(input.asInstanceOf[Array[Byte]], structType, avroSchema)
     catch { case _: Exception => null }
   override protected def withNewChildInternal(newChild: Expression): FromAvroOcf =
     copy(child = newChild)

@@ -364,33 +364,138 @@ object AvroOcf {
 
   /** OCF bytes -> InternalRow of the FIRST record (consumer.py:60-65
     * returns only the first record of the container). Throws on
-    * malformed input; callers choose null-on-error (PERMISSIVE). */
-  def decodeRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow =
-    decodeRow(bytes, sparkType, readerSchema, headerAndSync(readerSchema))
-
-  def decodeRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema,
-      hs: (Array[Byte], Array[Byte])): InternalRow = {
-    // fast path: a container we encoded ourselves (identical header incl
-    // deterministic sync) — decode the first datum directly, skipping the
-    // per-message header schema-JSON parse. Foreign containers (other
-    // sync markers, codecs, writer schemas) take the generic path below.
-    val (header, _) = hs
-    if (startsWith(bytes, header) && bytes.length > header.length) {
-      val dec = org.apache.avro.io.DecoderFactory.get()
-        .binaryDecoder(bytes, header.length, bytes.length - header.length, null)
-      val count = dec.readLong()
-      dec.readLong() // block byte size
-      if (count >= 1) {
-        val rec = new GenericDatumReader[GenericRecord](readerSchema).read(null, dec)
-        return recordToRow(rec, sparkType, readerSchema)
-      }
+    * malformed input; callers choose null-on-error (PERMISSIVE).
+    *
+    * One path for every uncompressed container, whatever its sync
+    * marker: walk the metadata map to the header's sync marker, look up
+    * the reader prepared for that header ([[preparedFor]]), then decode
+    * the first datum only once the first block is known to fit and to
+    * end in the header's sync marker. A damaged, cut-off or over-long
+    * block is an error whichever marker the producer picked, as it is
+    * for `DataFileStream`. Compressed containers (an `avro.codec` other
+    * than `null`) are read with `DataFileStream`. */
+  def decodeRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow = {
+    if (!startsWith(bytes, Magic)) throw new IllegalArgumentException("not an avro container")
+    val c = new Cursor(bytes, Magic.length)
+    var entries = c.long()
+    while (entries != 0) {
+      if (entries < 0) { entries = -entries; c.long() } // block byte size
+      while (entries > 0) { c.skip(c.length()); c.skip(c.length()); entries -= 1 }
+      entries = c.long()
     }
+    val syncAt = c.pos
+    val reader = preparedFor(bytes, syncAt, readerSchema)
+    if (reader == null) return viaDataFileStream(bytes, sparkType, readerSchema)
+    c.skip(SyncSize)
+    val count = c.long()
+    val size = c.length()
+    if (count < 1) throw new IllegalArgumentException("empty avro container")
+    if (size > bytes.length - c.pos - SyncSize ||
+        !java.util.Arrays.equals(bytes, c.pos + size, c.pos + size + SyncSize,
+          bytes, syncAt, syncAt + SyncSize))
+      throw new IllegalArgumentException("Invalid sync!")
+    val dec = org.apache.avro.io.DecoderFactory.get().binaryDecoder(bytes, c.pos, size, null)
+    recordToRow(reader.read(null, dec), sparkType, readerSchema)
+  }
+
+  /** `hs` is what [[headerAndSync]] gives for `readerSchema`; decode no
+    * longer needs it (every header goes through [[preparedFor]]), so
+    * this form only keeps existing callers compiling. */
+  def decodeRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema,
+      hs: (Array[Byte], Array[Byte])): InternalRow =
+    decodeRow(bytes, sparkType, readerSchema)
+
+  private val Magic = Array[Byte]('O', 'b', 'j', 1)
+  private val SyncSize = 16
+
+  /** Zigzag-varint reader over container bytes; every read is checked
+    * against the end of the array, so a damaged header fails fast. */
+  private final class Cursor(bytes: Array[Byte], var pos: Int) {
+    def long(): Long = {
+      var v = 0L
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) {
+        if (pos >= bytes.length || shift > 63)
+          throw new IllegalArgumentException("truncated avro container")
+        b = bytes(pos)
+        pos += 1
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      }
+      (v >>> 1) ^ -(v & 1)
+    }
+    /** A length prefix, which must fit in what is left of the bytes. */
+    def length(): Int = {
+      val n = long()
+      if (n < 0 || n > bytes.length - pos)
+        throw new IllegalArgumentException("truncated avro container")
+      n.toInt
+    }
+    def skip(n: Int): Unit = {
+      if (n > bytes.length - pos) throw new IllegalArgumentException("truncated avro container")
+      pos += n
+    }
+  }
+
+  /** A container header (magic + metadata, up to the sync marker) with
+    * the reader schema it is read into. Lookups wrap the message bytes
+    * without copying; stored keys own a copy. Avro caches
+    * `Schema.hashCode`; on a hit `eq` settles the schema half when the
+    * caller reuses one schema instance, a structural compare (~0.1 µs)
+    * when it does not. */
+  private final class HeaderKey(val bytes: Array[Byte], val len: Int, val reader: Schema) {
+    override val hashCode: Int = {
+      var h = reader.hashCode
+      var i = 0
+      while (i < len) { h = 31 * h + bytes(i); i += 1 }
+      h
+    }
+    override def equals(o: Any): Boolean = o match {
+      case k: HeaderKey => k.len == len &&
+        java.util.Arrays.equals(bytes, 0, len, k.bytes, 0, len) &&
+        ((k.reader eq reader) || k.reader == reader)
+      case _ => false
+    }
+  }
+
+  /** Bound on [[preparedFor]]'s cache. Distinct headers come from writer
+    * schema versions and codecs, so a topic sees a handful; past the
+    * bound the cache is emptied and refills. */
+  private[graft] val PreparedBound = 64
+  private val preparedReaders =
+    new java.util.concurrent.ConcurrentHashMap[HeaderKey, Option[GenericDatumReader[GenericRecord]]]()
+  private[graft] def preparedCount: Int = preparedReaders.size
+
+  /** The reader resolving this header's writer schema into
+    * `readerSchema`, or null for a compressed container. Built once per
+    * distinct header with `DataFileStream`'s own header parse (schema
+    * JSON, codec check), so the per-message cost is a hash lookup. */
+  private def preparedFor(bytes: Array[Byte], syncAt: Int,
+      readerSchema: Schema): GenericDatumReader[GenericRecord] = {
+    val probe = new HeaderKey(bytes, syncAt, readerSchema)
+    var hit = preparedReaders.get(probe)
+    if (hit == null) {
+      if (bytes.length - syncAt < SyncSize) throw new IllegalArgumentException("truncated avro container")
+      val header = new DataFileStream[GenericRecord](
+        new ByteArrayInputStream(bytes, 0, syncAt + SyncSize), new GenericDatumReader[GenericRecord]())
+      val codec = header.getMetaString(org.apache.avro.file.DataFileConstants.CODEC)
+      hit =
+        if (codec != null && codec != org.apache.avro.file.DataFileConstants.NULL_CODEC) None
+        else Some(new GenericDatumReader[GenericRecord](header.getSchema, readerSchema))
+      if (preparedReaders.size >= PreparedBound) preparedReaders.clear()
+      preparedReaders.put(new HeaderKey(java.util.Arrays.copyOf(bytes, syncAt), syncAt, readerSchema), hit)
+    }
+    hit.orNull
+  }
+
+  private def viaDataFileStream(bytes: Array[Byte], sparkType: StructType,
+      readerSchema: Schema): InternalRow = {
     val in = new DataFileStream[GenericRecord](
       new ByteArrayInputStream(bytes), new GenericDatumReader[GenericRecord](readerSchema))
     try {
       if (!in.hasNext) throw new IllegalArgumentException("empty avro container")
-      val rec = in.next()
-      recordToRow(rec, sparkType, readerSchema)
+      recordToRow(in.next(), sparkType, readerSchema)
     } finally in.close()
   }
 

@@ -66,42 +66,61 @@ object Router {
   def route(df: DataFrame): DataFrame =
     df.withColumn("status", statusCol(col("orderId"), col("product"), col("price")))
 
-  /** S6 DLQ enrichment: original payload + provenance headers
-    * (consumer.py:90-105). `timestamp` is wall-clock in the reference;
-    * callers pass a timestamp column so batch replays stay
-    * deterministic (pass `current_timestamp()` for live parity). */
-  def enrichDlq(routed: DataFrame, timestampEpoch: Column): DataFrame = {
-    // a decode failure (null struct from from_avro_ocf) is reported as
-    // such, not as a missing field — distinguishable only upstream of
-    // the projection, so detect the struct column when present
+  /** The DLQ record's provenance headers (consumer.py:90-105), in
+    * header order: header key -> the [[enrichDlq]] column holding its
+    * value. */
+  private val DlqHeaders = Seq("error_reason" -> "error_reason",
+    "original_topic" -> "original_topic", "original_partition" -> "original_partition",
+    "original_offset" -> "original_offset", "timestamp" -> "dlq_timestamp")
+
+  /** The provenance values over a routed frame, by [[enrichDlq]] column.
+    * A decode failure (null struct from from_avro_ocf) is reported as
+    * such, not as a missing field; that is only distinguishable upstream
+    * of the projection, so the struct column is detected when present. */
+  private def dlqProvenance(routed: DataFrame, timestampEpoch: Column): Map[String, Column] = {
     val decodeFailed =
       if (routed.columns.contains("order")) col("order").isNull else lit(false)
-    routed.filter(col("status") === Permanent)
-      .withColumn("error_reason",
-        errorReasonCol(col("orderId"), col("product"), col("price"), decodeFailed))
-      .withColumn("original_topic", coalesce(col("topic"), lit(graft.model.Schemas.OrdersTopic)))
-      .withColumn("original_partition", coalesce(col("partition"), lit(0)).cast("int"))
-      .withColumn("original_offset", coalesce(col("offset"), col("orderId").cast("long")))
-      .withColumn("dlq_timestamp", timestampEpoch.cast("long"))
+    Map(
+      "error_reason" -> errorReasonCol(col("orderId"), col("product"), col("price"), decodeFailed),
+      "original_topic" -> coalesce(col("topic"), lit(graft.model.Schemas.OrdersTopic)),
+      "original_partition" -> coalesce(col("partition"), lit(0)).cast("int"),
+      "original_offset" -> coalesce(col("offset"), col("orderId").cast("long")),
+      "dlq_timestamp" -> timestampEpoch.cast("long"))
   }
 
-  /** The DLQ record in Kafka-envelope shape: value = ORIGINAL raw bytes
-    * untouched (consumer.py:99-105), headers as array<struct<key,value>>. */
+  /** The DLQ record in Kafka-envelope shape: key, value = ORIGINAL raw
+    * bytes untouched (consumer.py:99-105), topic, and the headers as
+    * array<struct<key,value>>, each value read through `valueOf`. */
+  private def envelopeColumns(rawValue: Column, rawKey: Column,
+      valueOf: String => Column): Seq[Column] = Seq(
+    rawKey.as("key"),
+    rawValue.as("value"),
+    lit(graft.model.Schemas.DlqTopic).as("topic"),
+    array(DlqHeaders.map { case (k, c) =>
+      struct(lit(k).as("key"), encode(valueOf(c).cast("string"), "UTF-8").as("value"))
+    }: _*).as("headers"))
+
+  /** The DLQ envelope columns computed straight from a routed frame's
+    * columns, for a projection that routes every row in one pass (the
+    * fan-out); equal to [[dlqEnvelope]] over [[enrichDlq]]. */
+  def dlqEnvelopeColumns(routed: DataFrame, timestampEpoch: Column,
+      rawValue: Column, rawKey: Column): Seq[Column] =
+    envelopeColumns(rawValue, rawKey, dlqProvenance(routed, timestampEpoch))
+
+  /** S6 DLQ enrichment: the permanent rows with their provenance values
+    * as columns. `timestamp` is wall-clock in the reference; callers
+    * pass a timestamp column so batch replays stay deterministic (pass
+    * `current_timestamp()` for live parity). */
+  def enrichDlq(routed: DataFrame, timestampEpoch: Column): DataFrame = {
+    val provenance = dlqProvenance(routed, timestampEpoch)
+    DlqHeaders.foldLeft(routed.filter(col("status") === Permanent)) { case (df, (_, c)) =>
+      df.withColumn(c, provenance(c))
+    }
+  }
+
+  /** [[enrichDlq]]'s rows in Kafka-envelope shape. */
   def dlqEnvelope(enriched: DataFrame, rawValue: Column, rawKey: Column): DataFrame =
-    enriched.select(
-      rawKey.as("key"),
-      rawValue.as("value"),
-      lit(graft.model.Schemas.DlqTopic).as("topic"),
-      array(
-        struct(lit("error_reason").as("key"), encode(col("error_reason"), "UTF-8").as("value")),
-        struct(lit("original_topic").as("key"), encode(col("original_topic"), "UTF-8").as("value")),
-        struct(lit("original_partition").as("key"),
-          encode(col("original_partition").cast("string"), "UTF-8").as("value")),
-        struct(lit("original_offset").as("key"),
-          encode(col("original_offset").cast("string"), "UTF-8").as("value")),
-        struct(lit("timestamp").as("key"),
-          encode(col("dlq_timestamp").cast("string"), "UTF-8").as("value"))
-      ).as("headers"))
+    enriched.select(envelopeColumns(rawValue, rawKey, col(_)): _*)
 
   /** F2 bounded-retry ledger, re-modeled as dataflow: each transient
     * message fans out to its attempt schedule (1..maxRetries) with the

@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.MultiSinkParquet
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.avro.functions.from_avro_ocf
@@ -89,33 +90,29 @@ object OrderPipeline {
     * so a replayed batch (failure between sink writes and checkpoint
     * commit — the at-least-once window) rewrites identical data instead
     * of appending duplicates. This is what turns the checkpoint's
-    * at-least-once replay contract into effectively-once sink output. */
+    * at-least-once replay contract into effectively-once sink output.
+    *
+    * One projection gives every row its sink as a nullable struct, and
+    * one job writes all three sinks from it
+    * ([[org.apache.spark.sql.graftbridge.MultiSinkParquet]]): the batch
+    * is scanned, decoded and routed once, with no cached copy. The
+    * job's `_SUCCESS` marker lands in `outDir`. */
   def writeFanOut(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    batch.persist()
-    try {
-      batch.filter(col("status") === Router.Success)
-        .select(col("topic"), col("partition"), col("offset"),
-          col("orderId"), col("product"), col("price"))
-        .write.mode("overwrite").parquet(s"$outDir/success/batch=$batchId")
-
-      Router.dlqEnvelope(
-          Router.enrichDlq(batch, unix_timestamp(col("timestamp"))),
-          col("value"), col("key"))
-        .write.mode("overwrite").parquet(s"$outDir/dlq/batch=$batchId")
-
-      batch.filter(col("status") === Router.Transient)
-        // key/value ride along so a record that EXHAUSTS its retries
-        // still reaches the DLQ with the original payload bytes — the
-        // S6 contract (and consumer.py forwards the original message);
-        // without them the exhausted-retry DLQ records would be
-        // decoded-fields-only, unrecoverable for re-publication
-        .select(col("topic"), col("partition"), col("offset"),
-          col("orderId"), col("product"), col("price"),
-          col("key"), col("value"))
-        .withColumn("attempts", lit(1))
-        .write.mode("overwrite").parquet(s"$outDir/retry/batch=$batchId")
-    } finally batch.unpersist()
-    ()
+    val status = col("status")
+    val decoded = Seq(col("topic"), col("partition"), col("offset"),
+      col("orderId"), col("product"), col("price"))
+    val sinks = batch.select(
+      when(status === Router.Success, struct(decoded: _*)).as("success"),
+      when(status === Router.Permanent, struct(Router.dlqEnvelopeColumns(
+        batch, unix_timestamp(col("timestamp")), col("value"), col("key")): _*)).as("dlq"),
+      // key/value ride along so a record that EXHAUSTS its retries
+      // still reaches the DLQ with the original payload bytes — the
+      // S6 contract (and consumer.py forwards the original message);
+      // without them the exhausted-retry DLQ records would be
+      // decoded-fields-only, unrecoverable for re-publication
+      when(status === Router.Transient,
+        struct(decoded ++ Seq(col("key"), col("value"), lit(1).as("attempts")): _*)).as("retry"))
+    MultiSinkParquet.write(sinks, outDir, s"batch=$batchId")
   }
 
   /** Start the checkpointed fan-out pipeline. Writes:

@@ -428,4 +428,114 @@ class AvroCodecSpec extends SparkSpec {
     assert(got.head.getFloat(0) === 9.5f)
     assert(got.head.getInt(1) === 1 + 3 + 1 + 4 + 4) // varint+id, varint+product, float
   }
+
+
+  // ---- one decode path for every framing: sync-marker checks, prepared
+  // readers per writer header, compressed containers, schema resolution
+
+  /** One order as an OCF container from Avro's own writer: a random
+    * sync marker unless `sync` is given, the codec and extra metadata
+    * as set, written with `writer` (default: the order schema). */
+  private def container(id: String, product: String, price: Float,
+      sync: Array[Byte] = null, codec: org.apache.avro.file.CodecFactory = null,
+      meta: Map[String, String] = Map.empty, writer: Schema = schema,
+      fill: org.apache.avro.generic.GenericData.Record => Unit = null): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
+      new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](writer))
+    if (codec != null) w.setCodec(codec)
+    meta.foreach { case (k, v) => w.setMeta(k, v) }
+    if (sync == null) w.create(writer, out) else w.create(writer, out, sync)
+    val rec = new org.apache.avro.generic.GenericData.Record(writer)
+    if (fill == null) { rec.put("orderId", id); rec.put("product", product); rec.put("price", price) }
+    else fill(rec)
+    w.append(rec); w.close()
+    out.toByteArray
+  }
+
+  private def decoded(bytes: Array[Byte]): Option[(String, String, Float)] =
+    scala.util.Try(AvroOcf.decodeRow(bytes, Schemas.order, schema)).toOption.map(r =>
+      (r.getUTF8String(0).toString, r.getUTF8String(1).toString, r.getFloat(2)))
+
+  test("sync marker: own and foreign framings decode alike; damaged blocks are null in both") {
+    val own = AvroOcf.encodeRow(org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString("sync-1"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("Synced"), 12.5f),
+      Schemas.order, schema)
+    val foreign = container("sync-1", "Synced", 12.5f)
+    val headerLen = AvroOcf.headerAndSync(schema)._1.length
+    assert(own.length === foreign.length)
+    assert(own.slice(headerLen - 16, headerLen).toSeq !==
+      foreign.slice(headerLen - 16, headerLen).toSeq, "foreign framing must carry its own marker")
+    // the block after the header: count = 1 (zigzag 0x02), then a
+    // one-byte size for a datum this small, then the datum and marker
+    def withSize(b: Array[Byte], size: Int): Array[Byte] = {
+      val c = b.clone(); c(headerLen + 1) = (size * 2).toByte; c
+    }
+    for ((framing, bytes) <- Seq("own" -> own, "foreign" -> foreign)) {
+      assert(decoded(bytes) === Some(("sync-1", "Synced", 12.5f)), framing)
+      val size = bytes(headerLen + 1) / 2
+      assert(bytes.length === headerLen + 2 + size + 16, framing)
+      val damaged = Seq(
+        "trailing marker flipped" -> { val c = bytes.clone(); c(c.length - 3) = (c(c.length - 3) ^ 0x40).toByte; c },
+        "over-long block" -> withSize(bytes, size + 5),
+        "short block" -> withSize(bytes, size - 1),
+        "header marker flipped" -> { val c = bytes.clone(); c(headerLen - 1) = (c(headerLen - 1) ^ 1).toByte; c }) ++
+        (1 to 16).map(k => s"cut $k bytes short" -> bytes.dropRight(k)) ++
+        Seq(1, size / 2, size + 2).map(k => s"cut to ${headerLen + k} bytes" -> bytes.take(headerLen + k))
+      damaged.foreach { case (what, b) =>
+        assert(decoded(b) === None, s"$framing container, $what, decoded to ${decoded(b)}")
+      }
+    }
+    // the same through the expression: null, hence routed to the DLQ
+    val df = Seq(own, foreign, own.dropRight(1), foreign.dropRight(1)).toDF("value")
+    val got = df.select(A.from_avro_ocf($"value", Schemas.orderAvroJson).as("o"))
+      .collect().map(r => Option(r.getStruct(0)).map(_.getString(0)))
+    assert(got.toSeq === Seq(Some("sync-1"), Some("sync-1"), None, None))
+  }
+
+  test("deflate container decodes through DataFileStream; damage is still null") {
+    val deflated = container("z-1", "Zipped", 7.25f,
+      codec = org.apache.avro.file.CodecFactory.deflateCodec(6))
+    assert(new String(deflated, "ISO-8859-1").contains("deflate"))
+    assert(decoded(deflated) === Some(("z-1", "Zipped", 7.25f)))
+    assert(decoded(deflated.dropRight(1)) === None)
+    assert(decoded(deflated.take(deflated.length - 20)) === None)
+  }
+
+  test("more distinct writer headers than the cache bound: each decodes, the cache stays bounded") {
+    val n = AvroOcf.PreparedBound + 17
+    (0 until 2).foreach { pass =>
+      (0 until n).foreach { i =>
+        val b = container(s"h-$i", s"P$i", i.toFloat, meta = Map("graft.test.header" -> s"v$i"))
+        assert(decoded(b) === Some((s"h-$i", s"P$i", i.toFloat)), s"pass $pass header $i")
+        assert(AvroOcf.preparedCount <= AvroOcf.PreparedBound)
+      }
+    }
+  }
+
+  test("writer schema differing from the reader resolves per the Avro spec") {
+    // fields reordered, an extra writer field (skipped), price written
+    // as int (int -> float promotion)
+    val writer = new Schema.Parser().parse(
+      """{"type":"record","namespace":"com.assignment","name":"Order","fields":[
+        |{"name":"product","type":"string"},
+        |{"name":"channel","type":"string"},
+        |{"name":"price","type":"int"},
+        |{"name":"orderId","type":"string"}]}""".stripMargin.replace("\n", ""))
+    val b = container("", "", 0f, writer = writer, fill = rec => {
+      rec.put("product", "Evolved"); rec.put("channel", "web")
+      rec.put("price", 42); rec.put("orderId", "w-1")
+    })
+    assert(decoded(b) === Some(("w-1", "Evolved", 42.0f)))
+    // a reader field the writer lacks, with no default, cannot resolve
+    val missing = new Schema.Parser().parse(
+      """{"type":"record","namespace":"com.assignment","name":"Order","fields":[
+        |{"name":"orderId","type":"string"},
+        |{"name":"price","type":"float"}]}""".stripMargin.replace("\n", ""))
+    val m = container("", "", 0f, writer = missing, fill = rec => {
+      rec.put("orderId", "m-1"); rec.put("price", 1.0f)
+    })
+    assert(decoded(m) === None)
+  }
 }

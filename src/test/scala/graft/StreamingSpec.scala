@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.avro.Schema
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -1000,6 +1002,140 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/dlq").count() === 1)
   }
 
+  /** The fan-out as it was written before the one-job writer: the batch
+    * persisted, then one `write.parquet` per sink. Kept here as the
+    * reference the one-job output must equal. */
+  private def threeWriteFanOut(batch: org.apache.spark.sql.DataFrame, batchId: Long,
+      outDir: String): Unit = {
+    batch.persist()
+    try {
+      batch.filter(col("status") === Router.Success)
+        .select(col("topic"), col("partition"), col("offset"),
+          col("orderId"), col("product"), col("price"))
+        .write.mode("overwrite").parquet(s"$outDir/success/batch=$batchId")
+      Router.dlqEnvelope(
+          Router.enrichDlq(batch, unix_timestamp(col("timestamp"))),
+          col("value"), col("key"))
+        .write.mode("overwrite").parquet(s"$outDir/dlq/batch=$batchId")
+      batch.filter(col("status") === Router.Transient)
+        .select(col("topic"), col("partition"), col("offset"),
+          col("orderId"), col("product"), col("price"),
+          col("key"), col("value"))
+        .withColumn("attempts", lit(1))
+        .write.mode("overwrite").parquet(s"$outDir/retry/batch=$batchId")
+    } finally batch.unpersist()
+    ()
+  }
+
+  /** A mixed batch over several partitions: successes, transients,
+    * permanents, garbage, truncated payloads and containers framed with
+    * Avro's random sync marker. */
+  private def mixedBatch(n: Int, transients: Boolean = true): org.apache.spark.sql.DataFrame = {
+    val prices = Seq(200.0f, 30.0f, 1200.0f, 999.99f, -4.0f, 5.0f, 50.0f, 1000.01f, 0.5f)
+      .filter(p => transients || !(p >= 5.0f && p <= 50.0f))
+    val rows = (0 until n).map { i =>
+      val e = envelope(i, s"m$i", prices(i % prices.length))
+      i % 7 match {
+        case 3 => e.copy(value = e.value.dropRight(5))
+        case 4 => e.copy(value = Array[Byte](9, 9, i.toByte))
+        case 5 =>
+          val out = new java.io.ByteArrayOutputStream()
+          val w = new org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord](
+            new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](schema))
+          w.create(schema, out)
+          val rec = new org.apache.avro.generic.GenericData.Record(schema)
+          rec.put(0, s"m$i"); rec.put(1, s"Product m$i"); rec.put(2, prices(i % prices.length))
+          w.append(rec); w.close()
+          e.copy(value = out.toByteArray)
+        case _ => e
+      }
+    }
+    OrderPipeline.process(rows.toDS().toDF().repartition(3))
+  }
+
+  /** Each sink's schema and rows (as a multiset) are the same in both
+    * output directories. */
+  private def assertSameSinks(got: String, want: String): Unit =
+    Seq("success", "dlq", "retry").foreach { sink =>
+      val g = spark.read.parquet(s"$got/$sink")
+      val w = spark.read.parquet(s"$want/$sink")
+      assert(g.schema === w.schema, sink)
+      assert(g.count() === w.count(), sink)
+      assert(g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty, s"$sink rows differ")
+    }
+
+  private def filesUnder(dir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.map(p => root.relativize(p).toString).toList
+    finally walk.close()
+  }
+
+  test("one-job fan-out writes what three writes over a persisted batch wrote") {
+    val batch = mixedBatch(120)
+    val out = tmpDir("graft-onejob-out")
+    val ref = tmpDir("graft-onejob-ref")
+    OrderPipeline.writeFanOut(batch, batchId = 4, out)
+    threeWriteFanOut(batch, batchId = 4, ref)
+    assertSameSinks(out, ref)
+    Seq("success", "dlq", "retry").foreach { sink =>
+      assert(spark.read.parquet(s"$out/$sink").count() > 0, s"$sink got no rows")
+    }
+    // the one job's commit marker sits at the root, not in the sinks
+    assert(new java.io.File(s"$out/_SUCCESS").exists())
+    assert(!filesUnder(out).exists(_.contains("_temporary")))
+  }
+
+  test("a sink with no rows still leaves a readable batch directory with its schema") {
+    val batch = mixedBatch(40, transients = false)
+    val out = tmpDir("graft-onejob-empty")
+    val ref = tmpDir("graft-onejob-empty-ref")
+    OrderPipeline.writeFanOut(batch, batchId = 3, out)
+    threeWriteFanOut(batch, batchId = 3, ref)
+    val retry = spark.read.parquet(s"$out/retry/batch=3")
+    assert(retry.count() === 0)
+    assert(retry.schema === OrderPipeline.retryRecordSchema)
+    assert(retry.schema === spark.read.parquet(s"$ref/retry/batch=3").schema)
+    // a batch with no rows at all (an input plan with no partitions)
+    val empty = OrderPipeline.process(Seq.empty[Envelope].toDS().toDF())
+    OrderPipeline.writeFanOut(empty, batchId = 5, out)
+    threeWriteFanOut(empty, batchId = 5, ref)
+    assertSameSinks(out, ref)
+    Seq("success", "dlq", "retry").foreach { sink =>
+      assert(spark.read.parquet(s"$out/$sink/batch=5").schema ===
+        spark.read.parquet(s"$ref/$sink/batch=5").schema, sink)
+    }
+  }
+
+  test("a fan-out job failing mid-way, then replayed, leaves exactly one copy per sink") {
+    val base = mixedBatch(200)
+    val failOnce = udf { (offset: Long) =>
+      if (offset == 150L && FanOutFault.armed.getAndSet(false))
+        throw new IllegalStateException("injected fan-out fault")
+      offset
+    }
+    val batch = base.withColumn("offset", failOnce(col("offset")))
+    val out = tmpDir("graft-onejob-fail")
+    val ref = tmpDir("graft-onejob-fail-ref")
+    FanOutFault.armed.set(false)
+    threeWriteFanOut(batch, batchId = 9, ref)
+    // a complete earlier attempt, then one that dies part-way through
+    OrderPipeline.writeFanOut(batch, batchId = 9, out)
+    FanOutFault.armed.set(true)
+    val err = intercept[Exception](OrderPipeline.writeFanOut(batch, batchId = 9, out))
+    assert(!FanOutFault.armed.get(), s"the fault never fired: $err")
+    // files reach the sinks only at job commit: the failed attempt left
+    // no partial batch and no staging files behind
+    Seq("success", "dlq", "retry").foreach { sink =>
+      assert(!new java.io.File(s"$out/$sink/batch=9").exists(), sink)
+      assert(!filesUnder(s"$out/$sink").exists(_.contains("_temporary")), sink)
+    }
+    // the replay: same batch id, same rows
+    OrderPipeline.writeFanOut(batch, batchId = 9, out)
+    assertSameSinks(out, ref)
+    assert(!filesUnder(out).exists(_.contains("_temporary")))
+  }
+
   test("streaming dedup drops redelivered messages") {
     val stream = MemoryStream[Envelope](spark)
     val e = envelope(0, "a", 100.0f)
@@ -1283,4 +1419,10 @@ class StreamingSpec extends SparkSpec {
         first.getLong(3) === 32L)
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
+}
+
+/** Arms the one-shot fault of StreamingSpec's failing fan-out job; a
+  * global, so the executor-side UDF sees the flag the test sets. */
+private object FanOutFault {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
