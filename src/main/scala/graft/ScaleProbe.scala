@@ -476,11 +476,6 @@ object ScaleProbe {
         "k", "v", numPartitions = cpus * 4)
         .agg(max(col("run_sum"))).collect()
     }
-    timed("codec encode+decode (500k)") {
-      val enc = OrderGen.toEnvelopes(
-        OrderGen.orders(spark, rows / 10, "probe-codec"))
-      graft.stream.OrderPipeline.process(enc).count()
-    }
     timed("raw-datum encode+decode (500k)") {
       import graft.avro.functions.{from_avro_datum, to_avro_datum}
       OrderGen.orders(spark, rows / 10, "probe-datum")

@@ -291,8 +291,9 @@ object functions {
     ColumnBridge.column(AvroFraming(ColumnBridge.expression(c)))
 
   /** Register all four for SQL use: `from_avro_ocf(col, 'schema-json')`. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  def register(spark: SparkSession): Unit = register(spark.sessionState.functionRegistry)
+
+  def register(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
     def lit(e: Expression): String = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(s, StringType) if s != null => s.toString
       case other => throw new IllegalArgumentException(s"schema must be a string literal, got $other")

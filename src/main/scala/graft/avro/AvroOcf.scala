@@ -14,6 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.Limits
+
 /** Avro **Object Container File** codec for single-record messages.
   *
   * The reference frames every Kafka message as a complete Avro OCF —
@@ -310,12 +312,83 @@ object AvroOcf {
     * format's decode path, where the writer schema comes from the
     * registry id embedded in the frame). */
   def decodeDatumRowResolved(bytes: Array[Byte], offset: Int, sparkType: StructType,
-      writerSchema: Schema, readerSchema: Schema): InternalRow = {
-    val dec = org.apache.avro.io.DecoderFactory.get()
-      .binaryDecoder(bytes, offset, bytes.length - offset, null)
-    val rec = new GenericDatumReader[GenericRecord](writerSchema, readerSchema)
-      .read(null, dec)
-    recordToRow(rec, sparkType, readerSchema)
+      writerSchema: Schema, readerSchema: Schema): InternalRow =
+    readDatum(bytes, offset, bytes.length - offset,
+      new GenericDatumReader[GenericRecord](writerSchema, readerSchema), sparkType, readerSchema)
+
+  /** The datum decode every framing (OCF, raw datum, Confluent) ends
+    * in: the first datum of `bytes[off, off + len)`, read by `reader`
+    * (whose schema is the writer's). [[checkDatum]] walks the datum
+    * first, so `GenericDatumReader` never allocates for a declared
+    * length the bytes cannot hold. */
+  private def readDatum(bytes: Array[Byte], off: Int, len: Int,
+      reader: GenericDatumReader[GenericRecord], sparkType: StructType,
+      readerSchema: Schema): InternalRow = {
+    if (off < 0 || len < 0 || off > bytes.length - len)
+      throw new IllegalArgumentException("truncated avro datum")
+    checkDatum(new Cursor(bytes, off, off + len), reader.getSchema, 0)
+    val dec = org.apache.avro.io.DecoderFactory.get().binaryDecoder(bytes, off, len, null)
+    recordToRow(reader.read(null, dec), sparkType, readerSchema)
+  }
+
+  /** Walks one datum of writer schema `s` and checks, before anything
+    * is allocated for them, that every string/bytes length and array or
+    * map block fits in the bytes left. An item count over items that
+    * encode to at least one byte is bounded by the bytes left; items of
+    * zero bytes (null, empty records) by [[Limits.AvroZeroByteItems]]
+    * over the whole datum. Nesting deeper than [[Limits.AvroDepth]] (a writer schema may be
+    * recursive) is refused too, so the walk and the read after it stay
+    * off the end of the stack. */
+  private def checkDatum(c: Cursor, s: Schema, depth: Int): Unit = {
+    if (depth > Limits.AvroDepth) throw new IllegalArgumentException("avro datum nested too deep")
+    s.getType match {
+      case Schema.Type.NULL =>
+      case Schema.Type.BOOLEAN => c.skip(1)
+      case Schema.Type.INT | Schema.Type.LONG | Schema.Type.ENUM => c.long()
+      case Schema.Type.FLOAT => c.skip(4)
+      case Schema.Type.DOUBLE => c.skip(8)
+      case Schema.Type.STRING | Schema.Type.BYTES => c.skip(c.length())
+      case Schema.Type.FIXED => c.skip(s.getFixedSize)
+      case Schema.Type.UNION =>
+        val branch = c.long()
+        if (branch < 0 || branch >= s.getTypes.size)
+          throw new IllegalArgumentException(s"avro union branch $branch out of range")
+        checkDatum(c, s.getTypes.get(branch.toInt), depth + 1)
+      case Schema.Type.RECORD =>
+        val fields = s.getFields
+        var i = 0
+        while (i < fields.size) { checkDatum(c, fields.get(i).schema, depth + 1); i += 1 }
+      case Schema.Type.ARRAY =>
+        val item = s.getElementType
+        checkItems(c, encodesToBytes(item, Set.empty), checkDatum(c, item, depth + 1))
+      case Schema.Type.MAP =>
+        checkItems(c, itemHasBytes = true, { c.skip(c.length()); checkDatum(c, s.getValueType, depth + 1) })
+    }
+  }
+
+  /** The blocks of one array or map: a count, a byte size when the
+    * count is negative, the items; a zero count ends it. Zero-byte
+    * items count against the whole datum's [[Limits.AvroZeroByteItems]],
+    * so nested arrays cannot multiply the cap. */
+  private def checkItems(c: Cursor, itemHasBytes: Boolean, item: => Unit): Unit = {
+    var n = c.long()
+    while (n != 0) {
+      if (n < 0) { n = -n; c.length() }
+      if (n < 0 || (if (itemHasBytes) n > c.left else n > Limits.AvroZeroByteItems - c.zeroByteItems))
+        throw new IllegalArgumentException(s"avro block of $n items does not fit")
+      if (!itemHasBytes) c.zeroByteItems += n
+      while (n > 0) { item; n -= 1 }
+      n = c.long()
+    }
+  }
+
+  /** Whether every datum of `s` takes at least one byte. */
+  private def encodesToBytes(s: Schema, seen: Set[Schema]): Boolean = s.getType match {
+    case Schema.Type.NULL => false
+    case Schema.Type.FIXED => s.getFixedSize > 0
+    case Schema.Type.RECORD =>
+      !seen.contains(s) && s.getFields.asScala.exists(f => encodesToBytes(f.schema, seen + s))
+    case _ => true
   }
 
   /** Confluent Schema Registry wire format: `0x00` magic byte, 4-byte
@@ -366,14 +439,14 @@ object AvroOcf {
     * returns only the first record of the container). Throws on
     * malformed input; callers choose null-on-error (PERMISSIVE).
     *
-    * One path for every uncompressed container, whatever its sync
-    * marker: walk the metadata map to the header's sync marker, look up
-    * the reader prepared for that header ([[preparedFor]]), then decode
+    * One path for every container, whatever its sync marker and codec:
+    * walk the metadata map to the header's sync marker, look up the
+    * reader prepared for that header ([[preparedFor]]), then decode
     * the first datum only once the first block is known to fit and to
     * end in the header's sync marker. A damaged, cut-off or over-long
     * block is an error whichever marker the producer picked, as it is
-    * for `DataFileStream`. Compressed containers (an `avro.codec` other
-    * than `null`) are read with `DataFileStream`. */
+    * for `DataFileStream`. A compressed block (an `avro.codec` other
+    * than `null`) is inflated first, up to [[Limits.AvroBlockOut]]. */
   def decodeRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow = {
     if (!startsWith(bytes, Magic)) throw new IllegalArgumentException("not an avro container")
     val c = new Cursor(bytes, Magic.length)
@@ -384,18 +457,21 @@ object AvroOcf {
       entries = c.long()
     }
     val syncAt = c.pos
-    val reader = preparedFor(bytes, syncAt, readerSchema)
-    if (reader == null) return viaDataFileStream(bytes, sparkType, readerSchema)
+    val prepared = preparedFor(bytes, syncAt, readerSchema)
     c.skip(SyncSize)
     val count = c.long()
     val size = c.length()
     if (count < 1) throw new IllegalArgumentException("empty avro container")
-    if (size > bytes.length - c.pos - SyncSize ||
+    if (size > c.left - SyncSize ||
         !java.util.Arrays.equals(bytes, c.pos + size, c.pos + size + SyncSize,
           bytes, syncAt, syncAt + SyncSize))
       throw new IllegalArgumentException("Invalid sync!")
-    val dec = org.apache.avro.io.DecoderFactory.get().binaryDecoder(bytes, c.pos, size, null)
-    recordToRow(reader.read(null, dec), sparkType, readerSchema)
+    if (prepared.codec == null)
+      readDatum(bytes, c.pos, size, prepared.reader, sparkType, readerSchema)
+    else {
+      val block = inflate(prepared.codec, bytes, c.pos, size)
+      readDatum(block, 0, block.length, prepared.reader, sparkType, readerSchema)
+    }
   }
 
   /** `hs` is what [[headerAndSync]] gives for `readerSchema`; decode no
@@ -408,15 +484,19 @@ object AvroOcf {
   private val Magic = Array[Byte]('O', 'b', 'j', 1)
   private val SyncSize = 16
 
-  /** Zigzag-varint reader over container bytes; every read is checked
-    * against the end of the array, so a damaged header fails fast. */
-  private final class Cursor(bytes: Array[Byte], var pos: Int) {
+  /** Zigzag-varint reader over `bytes[pos, end)`; every read is
+    * checked against `end`, so damaged bytes fail fast. */
+  private final class Cursor(bytes: Array[Byte], var pos: Int, end: Int) {
+    def this(bytes: Array[Byte], pos: Int) = this(bytes, pos, bytes.length)
+    /** Zero-byte array items a [[checkDatum]] walk has admitted so far. */
+    var zeroByteItems = 0L
+    def left: Int = end - pos
     def long(): Long = {
       var v = 0L
       var shift = 0
       var b = 0x80
       while ((b & 0x80) != 0) {
-        if (pos >= bytes.length || shift > 63)
+        if (pos >= end || shift > 63)
           throw new IllegalArgumentException("truncated avro container")
         b = bytes(pos)
         pos += 1
@@ -428,12 +508,12 @@ object AvroOcf {
     /** A length prefix, which must fit in what is left of the bytes. */
     def length(): Int = {
       val n = long()
-      if (n < 0 || n > bytes.length - pos)
+      if (n < 0 || n > end - pos)
         throw new IllegalArgumentException("truncated avro container")
       n.toInt
     }
     def skip(n: Int): Unit = {
-      if (n > bytes.length - pos) throw new IllegalArgumentException("truncated avro container")
+      if (n > end - pos) throw new IllegalArgumentException("truncated avro container")
       pos += n
     }
   }
@@ -463,16 +543,17 @@ object AvroOcf {
     * schema versions and codecs, so a topic sees a handful; past the
     * bound the cache is emptied and refills. */
   private[graft] val PreparedBound = 64
-  private val preparedReaders =
-    new java.util.concurrent.ConcurrentHashMap[HeaderKey, Option[GenericDatumReader[GenericRecord]]]()
+  private val preparedReaders = new java.util.concurrent.ConcurrentHashMap[HeaderKey, Prepared]()
   private[graft] def preparedCount: Int = preparedReaders.size
 
-  /** The reader resolving this header's writer schema into
-    * `readerSchema`, or null for a compressed container. Built once per
-    * distinct header with `DataFileStream`'s own header parse (schema
-    * JSON, codec check), so the per-message cost is a hash lookup. */
-  private def preparedFor(bytes: Array[Byte], syncAt: Int,
-      readerSchema: Schema): GenericDatumReader[GenericRecord] = {
+  /** A header's reader (writer schema resolved into the reader schema)
+    * and its block codec, null when blocks are stored uncompressed. */
+  private final class Prepared(val reader: GenericDatumReader[GenericRecord], val codec: String)
+
+  /** What decoding under this header needs, built once per distinct
+    * header with `DataFileStream`'s own header parse (schema JSON,
+    * codec check), so the per-message cost is a hash lookup. */
+  private def preparedFor(bytes: Array[Byte], syncAt: Int, readerSchema: Schema): Prepared = {
     val probe = new HeaderKey(bytes, syncAt, readerSchema)
     var hit = preparedReaders.get(probe)
     if (hit == null) {
@@ -480,23 +561,56 @@ object AvroOcf {
       val header = new DataFileStream[GenericRecord](
         new ByteArrayInputStream(bytes, 0, syncAt + SyncSize), new GenericDatumReader[GenericRecord]())
       val codec = header.getMetaString(org.apache.avro.file.DataFileConstants.CODEC)
-      hit =
-        if (codec != null && codec != org.apache.avro.file.DataFileConstants.NULL_CODEC) None
-        else Some(new GenericDatumReader[GenericRecord](header.getSchema, readerSchema))
+      hit = new Prepared(new GenericDatumReader[GenericRecord](header.getSchema, readerSchema),
+        if (codec == org.apache.avro.file.DataFileConstants.NULL_CODEC) null else codec)
       if (preparedReaders.size >= PreparedBound) preparedReaders.clear()
       preparedReaders.put(new HeaderKey(java.util.Arrays.copyOf(bytes, syncAt), syncAt, readerSchema), hit)
     }
-    hit.orNull
+    hit
   }
 
-  private def viaDataFileStream(bytes: Array[Byte], sparkType: StructType,
-      readerSchema: Schema): InternalRow = {
-    val in = new DataFileStream[GenericRecord](
-      new ByteArrayInputStream(bytes), new GenericDatumReader[GenericRecord](readerSchema))
+  /** One compressed block, inflated with its codec up to
+    * [[Limits.AvroBlockOut]] bytes; a block that inflates past the cap
+    * is an error, like a damaged one. */
+  private def inflate(codec: String, bytes: Array[Byte], off: Int, len: Int): Array[Byte] = {
+    def in = new ByteArrayInputStream(bytes, off, len)
+    var inflater: java.util.zip.Inflater = null // ended here: the stream ends only its own
+    val stream: java.io.InputStream = codec match {
+      case "deflate" =>
+        inflater = new java.util.zip.Inflater(true)
+        new java.util.zip.InflaterInputStream(in, inflater)
+      case "bzip2" => new org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream(in)
+      // the block header declares the LZMA2 dictionary (up to 1.5 GiB),
+      // allocated before any output: refuse one past the block cap
+      case "xz" => new org.tukaani.xz.SingleXZInputStream(in, (Limits.AvroBlockOut >> 10) + 1024)
+      case "zstandard" => new com.github.luben.zstd.ZstdInputStreamNoFinalizer(in)
+      case "snappy" =>
+        // raw snappy, then the big-endian CRC32 of the inflated bytes
+        if (len < 4) throw new IllegalArgumentException("truncated snappy block")
+        val out = graft.functions.Snappy.decompress(java.util.Arrays.copyOfRange(bytes, off, off + len - 4))
+          .getOrElse(throw new IllegalArgumentException("damaged snappy block"))
+        val crc = new java.util.zip.CRC32()
+        crc.update(out)
+        if (crc.getValue.toInt != java.nio.ByteBuffer.wrap(bytes, off + len - 4, 4).getInt)
+          throw new IllegalArgumentException("snappy block checksum mismatch")
+        if (out.length > Limits.AvroBlockOut) throw new IllegalArgumentException("avro block too large")
+        return out
+      case other => throw new IllegalArgumentException(s"unsupported avro codec $other")
+    }
     try {
-      if (!in.hasNext) throw new IllegalArgumentException("empty avro container")
-      recordToRow(in.next(), sparkType, readerSchema)
-    } finally in.close()
+      val out = new ByteArrayOutputStream(math.min(4L * len + 64, Limits.AvroBlockOut).toInt)
+      val buf = new Array[Byte](8192)
+      var n = stream.read(buf)
+      while (n >= 0) {
+        if (out.size > Limits.AvroBlockOut - n) throw new IllegalArgumentException("avro block too large")
+        out.write(buf, 0, n)
+        n = stream.read(buf)
+      }
+      out.toByteArray
+    } finally {
+      stream.close()
+      if (inflater != null) inflater.end()
+    }
   }
 
   /** Avro generic value -> Catalyst internal value, recursively. Map

@@ -74,7 +74,7 @@ object Bmp {
     val hRaw = le32(b, 22)
     val topDown = hRaw < 0
     val h = math.abs(hRaw)
-    if (w <= 0 || h <= 0 || w.toLong * h > (1 << 24)) return None
+    if (!Limits.pixelsOk(w, h, Limits.BmpPixels)) return None
     if (le16(b, 26) != 1) return None
     if (le16(b, 28) != 24) return None // 24-bit only
     if (le32(b, 30) != 0) return None // BI_RGB only

@@ -25,10 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
 object Ico {
 
   private def le16(b: Array[Byte], i: Int): Int =
-    if (i < 0 || i + 2 > b.length) -1
+    if (i < 0 || i > b.length - 2) -1
     else (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
   private def le32(b: Array[Byte], i: Int): Long =
-    if (i < 0 || i + 4 > b.length) -1L
+    if (i < 0 || i > b.length - 4) -1L
     else (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
       ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
@@ -99,7 +99,7 @@ object Ico {
     val h2 = le32(b, 8).toInt
     if (w <= 0 || h2 <= 0 || (h2 & 1) != 0) return bad
     val h = h2 / 2
-    if (w.toLong * h > (1 << 20)) return bad
+    if (!Limits.pixelsOk(w, h, Limits.IcoPixels)) return bad
     if (le16(b, 12) != 1 || le16(b, 14) != 24) return bad
     if (le32(b, 16) != 0) return bad // BI_RGB only
     val xorStride = (3 * w + 3) & ~3

@@ -754,7 +754,6 @@ case class GzipCompress(child: Expression)
   * row rather than an executor OOM. */
 case class GzipDecompress(child: Expression)
     extends UnaryExpression with CodegenFallback {
-  private val MaxOut = 1 << 26 // 64 MiB
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def checkInputDataTypes() = child.dataType match {
@@ -773,7 +772,7 @@ case class GzipDecompress(child: Expression)
       var n = gz.read(buf)
       while (n >= 0) {
         total += n
-        if (total > MaxOut) return null // bomb guard: malformed, routed
+        if (total > Limits.GzipOut) return null // bomb guard: malformed, routed
         bos.write(buf, 0, n)
         n = gz.read(buf)
       }

@@ -1016,7 +1016,7 @@ object Png {
             (depth == 16 && colorType == 3) ||
             b(i + 18) != 0 || b(i + 19) != 0 ||
             (b(i + 20) != 0 && b(i + 20) != 1)) return None
-          if (w <= 0 || h <= 0 || w.toLong * h > (1 << 24)) return None
+          if (!Limits.pixelsOk(w, h, Limits.PngPixels)) return None
         case "PLTE" =>
           // spec §11.2.3: length divisible by 3, 1..256 RGB entries
           if (len % 3 != 0 || len < 3 || len > 768) return None
@@ -1286,7 +1286,7 @@ object Gif {
           val w = le16(p + 5); val h = le16(p + 7)
           val flags = u8(p + 9)
           p += 10
-          if (w <= 0 || h <= 0 || w.toLong * h > (1 << 24)) return None
+          if (!Limits.pixelsOk(w, h, Limits.GifPixels)) return None
           var ct = gct
           if ((flags & 0x80) != 0) { // local color table wins
             val n = 2 << (flags & 0x07)
@@ -2511,7 +2511,7 @@ object Jpeg {
             c += 1
           }
           if (blocksPerMcu > 10) return None // interleave bound (B.2.3)
-          if (w <= 0 || h <= 0 || w.toLong * h > (1 << 24)) return None
+          if (!Limits.pixelsOk(w, h, Limits.JpegPixels)) return None
         case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
             0xcb | 0xcd | 0xce | 0xcf =>
           return None // non-baseline frame types out of scope
@@ -3261,7 +3261,7 @@ object Jpeg {
             h = be16i(seg + 1); w = be16i(seg + 3)
             ncomp = u8(seg + 5)
             if (w <= 0 || h <= 0 || (ncomp != 1 && ncomp != 3)) return None
-            if (w.toLong * h > (1 << 22)) return None
+            if (!Limits.pixelsOk(w, h, Limits.ProgressiveJpegPixels)) return None
             if (len < 8 + 3 * ncomp) return None
             qtSels = new Array[Int](ncomp)
             hS = new Array[Int](ncomp); vS = new Array[Int](ncomp)

@@ -121,7 +121,7 @@ object Qoi {
         ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
     val w = be32(4); val h = be32(8)
     val channels = b(12) & 0xff
-    if (w <= 0 || h <= 0 || w.toLong * h > (1 << 22)) return None
+    if (!Limits.pixelsOk(w, h, Limits.QoiPixels)) return None
     if (channels != 3 && channels != 4) return None
     if ((b(13) & 0xff) > 1) return None
     val n = w * h

@@ -109,7 +109,7 @@ object Snappy {
       shift += 7
       more = (v & 0x80) != 0
     }
-    if (expect > (1 << 26)) return None // 64 MiB cap for a cell value
+    if (expect > Limits.SnappyOut) return None
     val n = expect.toInt
     val out = new Array[Byte](n)
     var o = 0

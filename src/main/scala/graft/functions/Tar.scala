@@ -25,8 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * throws on arbitrary bytes. */
 object Tar {
 
-  val MaxEntryOut: Int = 1 << 26
-
   /** Parse an octal field (NUL/space-terminated). -1 = malformed. */
   private def octal(b: Array[Byte], off: Int, len: Int): Long = {
     var v = 0L
@@ -100,7 +98,7 @@ object Tar {
             case other => s"type_${other.toChar}"
           }
           val dataBlocks = ((size + 511) / 512).toInt
-          if (off + 512L + dataBlocks * 512L > b.length || size > MaxEntryOut) {
+          if (off + 512L + dataBlocks * 512L > b.length || size > Limits.TarEntryOut) {
             out += ((null, null, -1L, null)); done = true
           } else {
             val payload =

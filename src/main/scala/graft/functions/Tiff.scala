@@ -30,11 +30,11 @@ object Tiff {
 
   private final class Reader(b: Array[Byte], le: Boolean) {
     def u16(i: Int): Int =
-      if (i < 0 || i + 2 > b.length) -1
+      if (i < 0 || i > b.length - 2) -1
       else if (le) (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
       else ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
     def u32(i: Int): Long =
-      if (i < 0 || i + 4 > b.length) -1L
+      if (i < 0 || i > b.length - 4) -1L
       else if (le) ((b(i) & 0xffL)) | ((b(i + 1) & 0xffL) << 8) |
         ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
       else ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
@@ -104,7 +104,7 @@ object Tiff {
       }
       i += 1
     }
-    if (width <= 0 || height <= 0 || width * height > (1 << 22)) return None
+    if (!Limits.pixelsOk(width, height, Limits.TiffPixels)) return None
     if (!bitsOk || compression != 1) return None
     val channels = photometric match {
       case 1 => if (spp != 1) return None else 1

@@ -276,7 +276,7 @@ object Vp8 {
     if (d(3) != 0x9d.toByte || d(4) != 0x01.toByte || d(5) != 0x2a.toByte) return None
     val w = ((d(6) & 0xff) | ((d(7) & 0xff) << 8)) & 0x3fff
     val h = ((d(8) & 0xff) | ((d(9) & 0xff) << 8)) & 0x3fff
-    if (w == 0 || h == 0 || w.toLong * h > (1 << 26)) return None
+    if (!Limits.pixelsOk(w, h, Limits.Vp8Pixels)) return None
     val part0Start = 10
     if (part0Len <= 0 || part0Start + part0Len > d.length) return None
     val br = new BoolDec(d, part0Start, part0Start + part0Len)

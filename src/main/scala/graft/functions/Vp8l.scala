@@ -13,7 +13,7 @@ package graft.functions
   * huffman groups), color cache (1..11 bits), LZ77 with the 120-entry
   * 2D distance map, and all four transforms incl. pixel-bundled
   * color-indexing (2/4/8 px per byte). Admission-capped at
-  * [[Vp8l.MaxPixels]]; any malformation -> None, never a throw.
+  * [[Limits.Vp8lPixels]]; any malformation -> None, never a throw.
   *
   * Encoder (the round-trip anchor): literals with true package-merge
   * length-limited prefix codes, optional subtract-green, per-image
@@ -32,11 +32,6 @@ object Vp8l {
 
   private final class Corrupt extends RuntimeException(null, null, false, false)
   @inline private def fail(): Nothing = throw new Corrupt
-
-  /** Decode admission cap: 4 Mpx (16 MiB ARGB) per image — a corpus
-    * thumbnail/screenshot ceiling; 14-bit dims alone would admit
-    * 256 Mpx (1 GiB) from 5 header bytes. */
-  final val MaxPixels = 1 << 22
 
   // ------------------------------------------------------------- bit io
 
@@ -377,9 +372,8 @@ object Vp8l {
         readCode(r, 256), readCode(r, 256), readCode(r, 40))
       gi += 1
     }
-    val totalL = curW.toLong * h
-    if (curW <= 0 || h <= 0 || totalL > MaxPixels) fail()
-    val total = totalL.toInt
+    if (!Limits.pixelsOk(curW, h, Limits.Vp8lPixels)) fail()
+    val total = curW * h
     val px = new Array[Int](total)
     val cache = if (cacheSize > 0) new Array[Int](cacheSize) else null
     var pos = 0
@@ -573,7 +567,7 @@ object Vp8l {
       val h = ((bits >> 14) & 0x3fff).toInt + 1
       val alphaHint = ((bits >> 28) & 1) == 1
       if (((bits >> 29) & 7) != 0) return None // version must be 0
-      if (w.toLong * h > MaxPixels) return None
+      if (!Limits.pixelsOk(w, h, Limits.Vp8lPixels)) return None
       val r = new BitReader(blob, off + 5, end)
       val xforms = scala.collection.mutable.ArrayBuffer.empty[Xform]
       val (px0, w0) = decodeImageStream(r, w, h, level0 = true, xforms)
@@ -598,7 +592,7 @@ object Vp8l {
       w: Int, h: Int): Option[Array[Byte]] = {
     try {
       if (blob == null || off >= end || w <= 0 || h <= 0) return None
-      if (w.toLong * h > MaxPixels) return None
+      if (!Limits.pixelsOk(w, h, Limits.Vp8lPixels)) return None
       val r = new BitReader(blob, off, end)
       val xforms = scala.collection.mutable.ArrayBuffer.empty[Xform]
       val (px0, w0) = decodeImageStream(r, w, h, level0 = true, xforms)

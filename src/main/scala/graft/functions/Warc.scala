@@ -45,10 +45,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Warc {
 
-  /** Per-member decompressed cap — a zip bomb becomes a routed
-    * malformed row, not an executor OOM (GzipDecompress convention). */
-  val MaxMemberOut: Int = 1 << 26
-
   /** Parse an RFC 1952 member header at `off`; returns the offset of
     * the first deflate byte, or -1 if malformed/truncated. */
   def gzipHeaderEnd(b: Array[Byte], off: Int): Int = {
@@ -84,7 +80,7 @@ object Warc {
   /** Inflate ONE gzip member starting at `off`: returns
     * (decompressed, offsetAfterTrailer) or None for anything
     * malformed — bad header, deflate error, truncation, CRC32 or
-    * ISIZE mismatch, or output past [[MaxMemberOut]]. */
+    * ISIZE mismatch, or output past [[Limits.WarcMemberOut]]. */
   def inflateMember(b: Array[Byte], off: Int): Option[(Array[Byte], Int)] = {
     val data = gzipHeaderEnd(b, off)
     if (data < 0) return None
@@ -98,7 +94,7 @@ object Warc {
           try inf.inflate(buf)
           catch { case _: java.util.zip.DataFormatException => return None }
         if (n == 0 && !inf.finished()) return None // truncated stream
-        if (bos.size() + n > MaxMemberOut) return None // bomb guard
+        if (bos.size() + n > Limits.WarcMemberOut) return None // bomb guard
         bos.write(buf, 0, n)
       }
       val out = bos.toByteArray

@@ -35,8 +35,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * classify as unsupported (null row, walk continues). */
 object Zip {
 
-  val MaxEntryOut: Int = 1 << 26
-
   private def le16(b: Array[Byte], i: Int): Int =
     (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
   private def le32(b: Array[Byte], i: Int): Long =
@@ -97,7 +95,7 @@ object Zip {
     * the entry (not the container) is damaged or unsupported. */
   def extract(b: Array[Byte], en: Entry): Option[Array[Byte]] = {
     if ((en.flags & 0x1) != 0) return None // encrypted: unsupported
-    if (en.usize > MaxEntryOut || en.csize > b.length) return None
+    if (en.usize > Limits.ZipEntryOut || en.csize > b.length) return None
     if (en.usize == 0xffffffffL || en.csize == 0xffffffffL) return None // ZIP64
     val lo = en.localOff
     if (lo < 0 || lo + 30 > b.length) return None

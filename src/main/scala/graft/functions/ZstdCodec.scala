@@ -60,8 +60,6 @@ import org.apache.spark.sql.types._
 object ZstdCodec {
 
   // ---------------------------------------------------------------- limits
-  private final val MaxOut = 1 << 27 // 128 MiB decode admission cap
-  private final val MaxWindow = 1L << 27
   final val BlockMax = 128 * 1024
 
   /** Control-flow exception for corrupt input: caught at the
@@ -776,7 +774,7 @@ object ZstdCodec {
       // THIS frame's first byte; offsets reaching further back are
       // corrupt
       if (offset > st.frameLen.toLong + hist.length) fail()
-      if (st.frameLen.toLong + ml > MaxOut) fail()
+      if (st.frameLen.toLong + ml > Limits.ZstdOut) fail()
       var k = 0L
       while (k < ml) {
         val src = st.frameLen.toLong - offset
@@ -849,8 +847,8 @@ object ZstdCodec {
       p += fcsLen
     }
     if (singleSegment) windowSize = if (contentSize >= 0) contentSize else 0L
-    if (windowSize > MaxWindow) fail() // admission control, not format
-    if (contentSize > MaxOut) fail()
+    if (windowSize > Limits.ZstdWindow) fail() // admission control, not format
+    if (contentSize > Limits.ZstdOut) fail()
 
     val st = new FrameState(dict)
     val hist = if (dict != null) dict.content else Array.emptyByteArray
@@ -882,7 +880,7 @@ object ZstdCodec {
           p = blockEnd
         case _ => fail() // Reserved
       }
-      if (st.frameLen > MaxOut) fail()
+      if (st.frameLen > Limits.ZstdOut) fail()
     }
     val produced = st.frameLen
     if (contentSize >= 0 && produced != contentSize) fail()
@@ -935,7 +933,7 @@ object ZstdCodec {
         } else if (magic == 0xfd2fb528L) {
           p = decodeFrame(b, p, out, dict)
           sawFrame = true
-          if (out.size() > MaxOut) fail() // total cap across frames
+          if (out.size() > Limits.ZstdOut) fail() // total cap across frames
         } else fail()
       }
       if (!sawFrame) None else Some(out.toByteArray)

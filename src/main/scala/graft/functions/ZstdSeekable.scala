@@ -83,7 +83,7 @@ object ZstdSeekable {
     if ((descriptor & 0x7c) != 0) return None // reserved bits must be 0
     val hasCrc = (descriptor & 0x80) != 0
     val n = u32(b.length - 9)
-    if (n < 0 || n > (1 << 22)) return None
+    if (n < 0 || n > Limits.ZstdSeekFrames) return None
     val entryBytes = if (hasCrc) 12 else 8
     val tableLen = entryBytes * n.toInt + 9
     val skipStart = b.length - tableLen - 8

@@ -31,7 +31,9 @@ object StarCC {
     * of large+small rounds taken.
     *
     * `canonicalPairs = true` is the caller's GUARANTEE that every row
-    * already satisfies c1 < c2 and the (c1, c2) rows are distinct
+    * already satisfies c1 < c2 (checked in the first fingerprint job,
+    * which throws `IllegalArgumentException` when a row breaks it) and
+    * the (c1, c2) rows are distinct
     * (e.g. Dedup.jaccardPairs output: the candidate self-join enforces
     * a.id < b.id and the groupBy(d1, d2) makes pairs distinct). The
     * canonicalization pass (least/greatest + self-loop filter +
@@ -61,10 +63,15 @@ object StarCC {
     var edges = edges0
 
     // order-independent, overflow-free edge-set fingerprint (edges are
-    // distinct within a round, so xor cancellation cannot occur)
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        call_function("bit_xor", xxhash64(col("a"), col("b")))).head()
+    // distinct within a round, so xor cancellation cannot occur). With
+    // `checkOrder` the same job also checks the canonicalPairs promise.
+    def fingerprint(e: DataFrame, checkOrder: Boolean = false): (Long, Long) = {
+      val aggs = Seq(count(lit(1)), call_function("bit_xor", xxhash64(col("a"), col("b")))) ++
+        (if (checkOrder) Seq(max(col("a") >= col("b"))) else Nil)
+      val r = e.agg(aggs.head, aggs.tail: _*).head()
+      if (checkOrder && !r.isNullAt(2) && r.getBoolean(2))
+        throw new IllegalArgumentException(s"StarCC.labels(canonicalPairs = true) promises " +
+          s"$c1 < $c2 on every row, but a row has $c1 >= $c2; pass canonicalPairs = false")
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
@@ -96,7 +103,7 @@ object StarCC {
     // localCheckpoint blocks (they are RDD-level, not CacheManager
     // entries); superseded rounds' blocks are released by the
     // ContextCleaner once the old DataFrames become unreachable
-    var fp = fingerprint(edges)
+    var fp = fingerprint(edges, checkOrder = canonicalPairs)
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {

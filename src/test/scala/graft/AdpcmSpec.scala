@@ -70,12 +70,6 @@ class AdpcmSpec extends AnyFunSuite {
     "fuzz never throws") {
     assert(Adpcm.decode(Array[Byte](1, 2, 3)).isEmpty)
     assert(Adpcm.decode(Array[Byte](0, 0, 89, 0, 0)).isEmpty)
-    val good = Adpcm.synth(5L, 48)
-    for (i <- good.indices) {
-      Adpcm.decode(good.take(i))
-      val flip = good.clone()
-      flip(i) = (flip(i) ^ 0x77).toByte
-      Adpcm.decode(flip) // must not throw
-    }
+    // fuzz: DecoderTotalitySpec's adpcm_stats row
   }
 }

@@ -481,7 +481,7 @@ class AvroCodecSpec extends SparkSpec {
         "over-long block" -> withSize(bytes, size + 5),
         "short block" -> withSize(bytes, size - 1),
         "header marker flipped" -> { val c = bytes.clone(); c(headerLen - 1) = (c(headerLen - 1) ^ 1).toByte; c }) ++
-        (1 to 16).map(k => s"cut $k bytes short" -> bytes.dropRight(k)) ++
+        Mutations.truncations(bytes).drop(bytes.length - 16).map(c => s"cut to ${c.length} bytes" -> c) ++
         Seq(1, size / 2, size + 2).map(k => s"cut to ${headerLen + k} bytes" -> bytes.take(headerLen + k))
       damaged.foreach { case (what, b) =>
         assert(decoded(b) === None, s"$framing container, $what, decoded to ${decoded(b)}")
@@ -537,5 +537,89 @@ class AvroCodecSpec extends SparkSpec {
       rec.put("orderId", "m-1"); rec.put("price", 1.0f)
     })
     assert(decoded(m) === None)
+  }
+
+  /** An Avro long (zigzag varint) of `v >= 0`. */
+  private def varint(v: Long): Array[Byte] = Mutations.varint(2 * v)
+
+  /** `forged` decodes to null, allocating under 16 MiB, once `valid`
+    * (same header) has decoded and warmed the prepared reader. */
+  private def nullWithoutAllocating(valid: Array[Byte], forged: Array[Byte]): Unit = {
+    def eval(b: Array[Byte]): Any = graft.avro.FromAvroOcf(
+      org.apache.spark.sql.catalyst.expressions.Literal(b), Schemas.orderAvroJson).eval()
+    assert(eval(valid) !== null)
+    var out: Any = "unset"
+    val bytes = Mutations.allocatedBy { out = eval(forged) }
+    assert(out === null)
+    assert(bytes < (16L << 20), s"allocated $bytes bytes")
+  }
+
+  test("a datum declaring a 2 GB string decodes to null without allocating it") {
+    val (header, sync) = AvroOcf.headerAndSync(schema)
+    val datum = varint(2147483000L) ++ Array.fill[Byte](8)('x')
+    val forged = header ++ varint(1) ++ varint(datum.length) ++ datum ++ sync
+    assert(forged.length === 241)
+    nullWithoutAllocating(AvroOcf.encodeRow(org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.unsafe.types.UTF8String.fromString("o-1"),
+      org.apache.spark.unsafe.types.UTF8String.fromString("P"), 1f), Schemas.order, schema), forged)
+  }
+
+  test("a deflate container declaring a 2 GB block decodes to null without allocating it") {
+    val deflated = container("z-1", "Zipped", 7.25f,
+      codec = org.apache.avro.file.CodecFactory.deflateCodec(6))
+    val sync = deflated.takeRight(16) // also the last 16 bytes of the header
+    val header = deflated.take(deflated.indexOfSlice(sync) + 16)
+    // the one block: count 1, a one-byte size, the deflated datum, sync
+    val block = deflated.slice(header.length + 2, deflated.length - 16)
+    nullWithoutAllocating(deflated, header ++ varint(1) ++ varint(2147483000L) ++ block ++ sync)
+  }
+
+  /** The header (up to and including the sync marker) and the sync
+    * marker of a one-block container. */
+  private def headerOf(container: Array[Byte]): (Array[Byte], Array[Byte]) = {
+    val sync = container.takeRight(16)
+    (container.take(container.indexOfSlice(sync) + 16), sync)
+  }
+
+  test("an xz block declaring a 1.5 GiB dictionary decodes to null without allocating it") {
+    val xzContainer = container("x-1", "Packed", 3.5f, codec = org.apache.avro.file.CodecFactory.xzCodec(6))
+    val (header, sync) = headerOf(xzContainer)
+    def crc32(b: Array[Byte]): Array[Byte] = {
+      val c = new java.util.zip.CRC32(); c.update(b)
+      Array.tabulate[Byte](4)(i => (c.getValue >>> (8 * i)).toByte)
+    }
+    // xz stream header (CRC32 check), then a 12-byte block header: one
+    // LZMA2 filter (id 0x21) whose props byte 37 asks for a 1.5 GiB
+    // dictionary, padding, and the header's valid CRC32
+    val flags = Array[Byte](0, 1)
+    val blockHeader = Array[Byte](2, 0, 0x21, 1, 37, 0, 0, 0)
+    val xz = Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0) ++ flags ++ crc32(flags) ++
+      blockHeader ++ crc32(blockHeader) ++ Array[Byte](1, 0, 0, 'x')
+    nullWithoutAllocating(xzContainer, header ++ varint(1) ++ varint(xz.length) ++ xz ++ sync)
+  }
+
+  test("zero-byte array items are capped per datum, not per nested array") {
+    val writer = new Schema.Parser().parse(
+      """{"type":"record","namespace":"com.assignment","name":"Order","fields":[
+        |{"name":"orderId","type":"string"},
+        |{"name":"product","type":"string"},
+        |{"name":"price","type":"float"},
+        |{"name":"tags","type":{"type":"array","items":{"type":"array","items":"null"}}}]}""".stripMargin.replace("\n", ""))
+    val (header, sync) = headerOf(container("", "", 0f, writer = writer, fill = rec => {
+      rec.put("orderId", "n-1"); rec.put("product", "P"); rec.put("price", 1f)
+      rec.put("tags", java.util.List.of())
+    }))
+    // orderId "n", product "p", price 1.0f, then `tags` as two inner
+    // arrays of `inner` nulls each
+    def message(inner: Long): Array[Byte] = {
+      val datum = varint(1) ++ Array[Byte]('n') ++ varint(1) ++ Array[Byte]('p') ++
+        Array[Byte](0, 0, 0x80.toByte, 0x3f) ++ varint(2) ++
+        (varint(inner) ++ varint(0)) ++ (varint(inner) ++ varint(0)) ++ varint(0)
+      header ++ varint(1) ++ varint(datum.length) ++ datum ++ sync
+    }
+    assert(decoded(message(3)) === Some(("n", "p", 1f)))
+    // each inner array is within the cap, their sum is not
+    val half = graft.functions.Limits.AvroZeroByteItems / 2 + 1
+    nullWithoutAllocating(message(3), message(half))
   }
 }

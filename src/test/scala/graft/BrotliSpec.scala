@@ -133,8 +133,8 @@ class BrotliSpec extends AnyFunSuite {
   test("truncation at every byte never throws and never round-trips") {
     val src = bytes(500, 3L)
     val stream = Brotli.wrap(src)
-    for (k <- 0 until stream.length) {
-      val r = Brotli.unwrap(stream.take(k))
+    for (cut <- Mutations.truncations(stream)) {
+      val r = Brotli.unwrap(cut)
       assert(r.isEmpty || !r.get.sameElements(src))
     }
     assert(Brotli.meta(null).kind == "malformed")

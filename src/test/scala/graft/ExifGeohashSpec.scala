@@ -41,14 +41,8 @@ class ExifGeohashSpec extends AnyFunSuite {
   test("exif: a JPEG without APP1, truncated APP1, and non-JPEG bytes " +
     "all extract as None; fuzz never throws") {
     assert(Exif.extract(gray(8, 8, 1L)).isEmpty)
-    val good = Exif.withExif(gray(8, 8, 1L), 1L, 8, 8)
-    for (i <- 0 until math.min(good.length, 200)) {
-      Exif.extract(good.take(i))
-      val flip = good.clone()
-      flip(i) = (flip(i) ^ 0x3c).toByte
-      Exif.extract(flip) // must not throw
-    }
     assert(Exif.extract("not a jpeg".getBytes).isEmpty)
+    // fuzz: DecoderTotalitySpec's exif_meta row
   }
 
   // ------------------------------------------------------------ geohash

@@ -90,13 +90,7 @@ class G711Spec extends SparkSpec {
     assert(G711.kind(null) === "not_wav")
     assert(G711.kind("RIFFxxxxNOPE".getBytes("US-ASCII")) === "not_wav")
     assert(G711.kind("plain".getBytes("US-ASCII")) === "not_wav")
-    for (n <- 0 to pcm16.length) G711.kind(pcm16.take(n))
-    val rnd = new scala.util.Random(3)
-    for (_ <- 1 to 300) {
-      val b = pcm16.clone()
-      b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
-      G711.kind(b)
-    }
+    // truncations and flips: DecoderTotalitySpec's wav_kind row
     // g711 stats reject non-G.711 tags and malformed payloads
     val out = Seq(pcm16, withTag(3)).toDF("b")
       .select(audio.audio_stats_g711($"b").as("s")).collect()

@@ -115,20 +115,6 @@ class GifSpec extends AnyFunSuite {
     cases.foreach(b => assert(Gif.decode(b) === None))
   }
 
-  test("mutation fuzz: byte flips in a valid container never throw") {
-    val enc = Gif.encode(24, 18, idx(24, 18)((x, y) => x * 31 + y * 17), palette)
-    val rnd = new scala.util.Random(42)
-    for (_ <- 1 to 400) {
-      val b = enc.clone()
-      val flips = 1 + rnd.nextInt(4)
-      for (_ <- 1 to flips)
-        b(rnd.nextInt(b.length)) = (rnd.nextInt(256)).toByte
-      Gif.decode(b) // any Option outcome is fine; a throw fails the test
-    }
-    // truncations at every length too
-    for (n <- 0 to enc.length) Gif.decode(enc.take(n))
-  }
-
   test("header parser agrees with the codec's containers") {
     val enc = Gif.encode(33, 21, idx(33, 21)((x, y) => x + y), palette)
     assert(MediaHeaders.parse(enc) === Some(("gif", 33, 21)))

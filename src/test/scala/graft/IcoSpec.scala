@@ -58,10 +58,6 @@ class IcoSpec extends AnyFunSuite {
     // entry frame out of bounds
     val cut = good.take(good.length - 4)
     assert(Ico.decode(cut).isEmpty)
-    for (i <- 0 until math.min(good.length, 300)) {
-      val flip = good.clone()
-      flip(i) = (flip(i) ^ 0x5a).toByte
-      Ico.decode(flip) // must not throw
-    }
+    // fuzz: DecoderTotalitySpec's ico_stats row
   }
 }

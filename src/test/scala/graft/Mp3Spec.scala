@@ -40,12 +40,12 @@ class Mp3Spec extends AnyFunSuite {
   test("strict tiling: truncation, trailing garbage, mid-stream switches gate") {
     val blob = Mp3.synth(6L, corrupt = false)
     val full = Mp3.meta(blob).get
-    for (k <- 0 until blob.length) {
+    for (cut <- Mutations.truncations(blob)) {
       // a prefix ending EXACTLY on a frame boundary is a legal shorter
       // stream; anything else must fail the strict tiling
-      val r = Mp3.meta(blob.take(k))
+      val r = Mp3.meta(cut)
       assert(r.isEmpty || r.get.nFrames < full.nFrames,
-        s"truncation at $k admitted with full frame count")
+        s"truncation at ${cut.length} admitted with full frame count")
     }
     // trailing garbage that is not a 128-byte TAG block
     assert(Mp3.meta(blob ++ Array[Byte](1, 2, 3)).isEmpty)
@@ -64,18 +64,7 @@ class Mp3Spec extends AnyFunSuite {
   }
 
   test("bit-flip fuzz: null or a sane envelope, never a throw") {
-    var s = 777L
-    for (id <- Seq(2L, 5L, 12L); _ <- 0 until 500) {
-      val blob = Mp3.synth(id, corrupt = false)
-      s = s * 6364136223846793005L + 1442695040888963407L
-      val pos = math.floorMod((s >>> 33).toInt, blob.length)
-      s = s * 6364136223846793005L + 1442695040888963407L
-      blob(pos) = (blob(pos) ^ (1 << math.floorMod((s >>> 33).toInt, 8))).toByte
-      Mp3.meta(blob) match {
-        case None =>
-        case Some(m) =>
-          assert(m.nFrames >= 1 && m.sampleRate > 0 && m.kbpsSum > 0)
-      }
-    }
+    for (id <- Seq(2L, 5L, 12L); blob <- Mutations.bitFlips(Mp3.synth(id, corrupt = false), 500, 777L + id))
+      Mp3.meta(blob).foreach(m => assert(m.nFrames >= 1 && m.sampleRate > 0 && m.kbpsSum > 0))
   }
 }

@@ -33,9 +33,9 @@ class OggSpec extends AnyFunSuite {
     // truncation: a prefix ending exactly on a page boundary is a
     // legal shorter stream; anything else fails
     val full = Ogg.meta(blob).get
-    for (k <- 0 until blob.length) {
-      val r = Ogg.meta(blob.take(k))
-      assert(r.isEmpty || r.get.nPages < full.nPages, s"at $k")
+    for (cut <- Mutations.truncations(blob)) {
+      val r = Ogg.meta(cut)
+      assert(r.isEmpty || r.get.nPages < full.nPages, s"at ${cut.length}")
     }
     assert(Ogg.meta(blob ++ Array[Byte](1, 2)).isEmpty) // trailing garbage
     assert(Ogg.meta(null).isEmpty)
@@ -95,17 +95,7 @@ class OggSpec extends AnyFunSuite {
   }
 
   test("bit-flip fuzz: null or sane, never a throw") {
-    var s = 31337L
-    for (id <- Seq(1L, 6L, 13L); _ <- 0 until 500) {
-      val blob = Ogg.synth(id, corrupt = false)
-      s = s * 6364136223846793005L + 1442695040888963407L
-      val pos = math.floorMod((s >>> 33).toInt, blob.length)
-      s = s * 6364136223846793005L + 1442695040888963407L
-      blob(pos) = (blob(pos) ^ (1 << math.floorMod((s >>> 33).toInt, 8))).toByte
-      Ogg.meta(blob) match {
-        case None =>
-        case Some(m) => assert(m.nPages >= 1 && m.nStreams >= 1)
-      }
-    }
+    for (id <- Seq(1L, 6L, 13L); blob <- Mutations.bitFlips(Ogg.synth(id, corrupt = false), 500, 31337L + id))
+      Ogg.meta(blob).foreach(m => assert(m.nPages >= 1 && m.nStreams >= 1))
   }
 }

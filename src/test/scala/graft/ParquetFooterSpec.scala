@@ -52,8 +52,7 @@ class ParquetFooterSpec extends SparkSpec {
 
   test("truncation at every byte never throws; tail mutations gate") {
     val blob = ParquetFooter.synth(9L, corrupt = false)
-    for (k <- 0 until blob.length)
-      ParquetFooter.parse(blob.take(k)) // must not throw
+    // every truncation: DecoderTotalitySpec's parquet_footer row
     assert(ParquetFooter.parse(null).isEmpty)
     assert(ParquetFooter.parse(Array.empty[Byte]).isEmpty)
     // magic damage front and back
@@ -71,19 +70,8 @@ class ParquetFooterSpec extends SparkSpec {
   test("bit-flip fuzz over the real region footer: null or sane, never a throw") {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$sf/region.parquet"))
-    var s = 12345L
-    for (_ <- 0 until 2000) {
-      s = s * 6364136223846793005L + 1442695040888963407L
-      val pos = math.floorMod((s >>> 33).toInt, bytes.length)
-      s = s * 6364136223846793005L + 1442695040888963407L
-      val bit = math.floorMod((s >>> 33).toInt, 8)
-      val mut = bytes.clone()
-      mut(pos) = (mut(pos) ^ (1 << bit)).toByte
-      ParquetFooter.parse(mut) match {
-        case None => // rejected
-        case Some(m) =>
-          assert(m.numRows >= 0 && m.nColumns >= 1 && m.nRowGroups >= 0)
-      }
-    }
+    for (mut <- Mutations.bitFlips(bytes, 2000, 12345L))
+      ParquetFooter.parse(mut).foreach(m =>
+        assert(m.numRows >= 0 && m.nColumns >= 1 && m.nRowGroups >= 0))
   }
 }

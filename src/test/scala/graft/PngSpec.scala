@@ -308,24 +308,6 @@ class PngSpec extends AnyFunSuite {
     assert(Png.decodeFull(pal).exists(_._3 == 3))
   }
 
-  test("mutation fuzz: byte flips in valid containers never throw") {
-    val rnd = new scala.util.Random(13)
-    val containers = Seq(
-      Png.encode(20, 14, px(20, 14)((x, y) => x * 31 + y * 17)),
-      Png.encodeRgba(10, 9, Array.tabulate(360)(i => (i * 7).toByte)),
-      Png.encodeInterlaced(15, 12, px(15, 12)((x, y) => x + y * 3)))
-    for (enc <- containers) {
-      for (_ <- 1 to 300) {
-        val b = enc.clone()
-        val flips = 1 + rnd.nextInt(4)
-        for (_ <- 1 to flips)
-          b(rnd.nextInt(b.length)) = (rnd.nextInt(256)).toByte
-        Png.decodeFull(b) // any Option outcome is fine; a throw fails
-      }
-      for (n <- 0 to enc.length) Png.decodeFull(enc.take(n))
-    }
-  }
-
   test("permissive None on malformed input, never a throw") {
     val enc = Png.encode(6, 6, px(6, 6)((x, y) => x * y))
     val cases = Seq[Array[Byte]](
@@ -390,12 +372,6 @@ class PngSpec extends AnyFunSuite {
     assert(Png.decode16(enc8) === None)
     assert(Png.decodeFull(enc16) === None)
     assert(Png.decode16(null) === None)
-    for (n <- 0 to enc16.length) Png.decode16(enc16.take(n))
-    val rnd = new scala.util.Random(5)
-    for (_ <- 1 to 200) {
-      val b = enc16.clone()
-      b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
-      Png.decode16(b) // any Option is fine; a throw fails
-    }
+    // fuzz: DecoderTotalitySpec's png_stats16 and png_stats_rgb rows
   }
 }

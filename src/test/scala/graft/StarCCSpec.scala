@@ -92,4 +92,17 @@ class StarCCSpec extends SparkSpec {
     assert(got.forall(_._2 == 0L), "every chain node must label to 0")
     assert(rounds <= 20, s"expected logarithmic rounds, got $rounds")
   }
+
+  test("canonicalPairs = true on reversed pairs throws and names the flag") {
+    // the promise is checked inside the first fingerprint job, so a
+    // caller that breaks it fails loudly instead of getting wrong labels
+    val reversed = Seq((2L, 1L), (3L, 2L)).toDF("x", "y")
+    val e = intercept[IllegalArgumentException] {
+      StarCC.labels(reversed, "x", "y", canonicalPairs = true)
+    }
+    assert(e.getMessage.contains("canonicalPairs"))
+    val (labels, _) = StarCC.labels(reversed, "x", "y")
+    assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
+      Seq((1L, 1L), (2L, 1L), (3L, 1L)))
+  }
 }

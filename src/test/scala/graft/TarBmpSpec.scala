@@ -48,21 +48,13 @@ class TarBmpSpec extends AnyFunSuite {
   test("tar fuzz: flips and truncations never throw; a malformed row is " +
     "always terminal") {
     val base = Tar.synth(2L, 2, corrupt = false)
-    val rnd = new scala.util.Random(23)
-    def check(b: Array[Byte]): Unit = {
+    for (b <- Mutations.byteStorms(base, 400, 23L) ++ Mutations.truncations(base) ++
+        Iterator("not a tar".getBytes("US-ASCII"))) {
       val rows = tarRows(b)
       val bads = rows.zipWithIndex.filter(!_._1.getBoolean(5))
       assert(bads.size <= 1)
       bads.foreach { case (_, i) => assert(i === rows.length - 1) }
     }
-    for (_ <- 1 to 400) {
-      val b = base.clone()
-      for (_ <- 0 to rnd.nextInt(3)) b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
-      check(b)
-    }
-    for (n <- 0 to base.length by 7) check(base.take(n))
-    check(Array.empty[Byte])
-    check("not a tar".getBytes("US-ASCII"))
   }
 
   test("bmp round-trips exactly across odd widths (padding) and both " +
@@ -96,13 +88,7 @@ class TarBmpSpec extends AnyFunSuite {
 
   test("bmp permissive None: truncations, flips, wrong depth/compression") {
     val enc = Bmp.encode(9, 7, Array.tabulate(189)(k => (k % 256).toByte))
-    for (n <- 0 to enc.length) Bmp.decode(enc.take(n))
-    val rnd = new scala.util.Random(31)
-    for (_ <- 1 to 300) {
-      val b = enc.clone()
-      b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
-      Bmp.decode(b)
-    }
+    // truncations and flips: DecoderTotalitySpec's bmp_stats_rgb row
     val depth8 = enc.clone(); depth8(28) = 8
     assert(Bmp.decode(depth8) === None)
     val rle = enc.clone(); rle(30) = 1 // BI_RLE8

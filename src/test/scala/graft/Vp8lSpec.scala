@@ -283,8 +283,8 @@ class Vp8lSpec extends AnyFunSuite {
     val px = randImage(19, 13, 77L, alpha = true)
     val blob = Vp8l.encode(px, 19, 13,
       EncOpts(subtractGreen = true, predictorMode = 7))
-    for (k <- 0 until blob.length) {
-      val r = Vp8l.decode(blob.take(k))
+    for (cut <- Mutations.truncations(blob)) {
+      val r = Vp8l.decode(cut)
       assert(r.isEmpty || !r.get.argb.sameElements(px))
     }
     assert(Vp8l.decode(null).isEmpty)
@@ -295,17 +295,10 @@ class Vp8lSpec extends AnyFunSuite {
     val px = randImage(17, 11, 5150L, alpha = false)
     for (mode <- 0 to 5) {
       val blob = Vp8l.encode(px, 17, 11, Vp8l.optsFor(3L, mode))
-      val r = rng(mode * 7919L)
-      for (_ <- 0 until 400) {
-        val mut = blob.clone()
-        val pos = math.floorMod(r(), mut.length)
-        mut(pos) = (mut(pos) ^ (1 << math.floorMod(r(), 8))).toByte
-        Vp8l.decode(mut) match {
-          case None => // rejected: fine
-          case Some(img) => // admitted: must be a sane image, not garbage state
-            assert(img.width >= 1 && img.height >= 1)
-            assert(img.argb.length == img.width * img.height)
-        }
+      // a rejection is fine; an admitted image must be sane, not garbage state
+      for (mut <- Mutations.bitFlips(blob, 400, mode * 7919L)) Vp8l.decode(mut).foreach { img =>
+        assert(img.width >= 1 && img.height >= 1)
+        assert(img.argb.length == img.width * img.height)
       }
     }
   }

@@ -50,8 +50,8 @@ class WarcSpec extends SparkSpec {
   test("fuzz: byte flips and truncations anywhere never throw, and rows " +
     "are always a good prefix plus at most one terminal malformed row") {
     val base = Warc.synth(3L, 3, corruptLast = false)
-    val rnd = new scala.util.Random(11)
-    def check(b: Array[Byte]): Unit = {
+    for (b <- Mutations.byteStorms(base, 500, 11L) ++ Mutations.truncations(base) ++
+        Iterator("not a warc at all".getBytes("US-ASCII"))) {
       val rows = WarcEval.rows(b) // direct eval: no Spark job per case
       assert(rows.length <= 4, s"${rows.length} rows")
       val okFlags = rows.map(_._2)
@@ -63,15 +63,6 @@ class WarcSpec extends SparkSpec {
       // indices are always 0,1,2,...
       assert(rows.map(_._1) === rows.indices.toList)
     }
-    for (_ <- 1 to 500) {
-      val b = base.clone()
-      for (_ <- 0 to rnd.nextInt(3))
-        b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
-      check(b)
-    }
-    for (n <- 0 to base.length) check(base.take(n))
-    check(Array.empty[Byte])
-    check("not a warc at all".getBytes("US-ASCII"))
   }
 
   test("gzip member splitting agrees with java's own multi-member reader") {

@@ -36,8 +36,7 @@ class WebpSpec extends AnyFunSuite {
   }
 
   test("truncation at every byte and non-webp RIFFs never throw") {
-    val full = Webp.synth(5, 64, 48, corrupt = false)
-    for (k <- 0 until full.length) Webp.meta(full.take(k)) // no throw
+    // every truncation: DecoderTotalitySpec's webp_meta row
     assert(Webp.meta(null).isEmpty)
     assert(Webp.meta("RIFFxxxxWAVEfmt ".getBytes).isEmpty)
     assert(Webp.meta(Array.empty[Byte]).isEmpty)

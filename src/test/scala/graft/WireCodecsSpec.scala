@@ -61,14 +61,7 @@ class WireCodecsSpec extends AnyFunSuite {
 
   test("snappy fuzz: truncations and flips never throw; output either " +
     "matches the declared length or is rejected") {
-    val base = Snappy.compress(
-      ("abcabcabc duplicate duplicate 123" * 9).getBytes("UTF-8"))
-    for (i <- base.indices) {
-      Snappy.decompress(base.take(i))
-      val flip = base.clone()
-      flip(i) = (flip(i) ^ 0x41).toByte
-      Snappy.decompress(flip) // must not throw
-    }
+    // truncations and flips: DecoderTotalitySpec's snappy_decompress row
     // offsets before the start of output are rejected
     val bad = new java.io.ByteArrayOutputStream()
     bad.write(4)
@@ -100,12 +93,7 @@ class WireCodecsSpec extends AnyFunSuite {
     assert(Proto.profile(Array((3 << 3 | 3).toByte)).isEmpty) // group wire type
     assert(Proto.profile(Array(0.toByte, 1.toByte)).isEmpty)  // field 0
     assert(Proto.profile(Array.fill[Byte](11)(0x80.toByte)).isEmpty) // varint >10B
-    val rnd = new scala.util.Random(7)
-    for (_ <- 0 until 500) {
-      val b = new Array[Byte](rnd.nextInt(40))
-      rnd.nextBytes(b)
-      Proto.profile(b) // must not throw
-    }
+    // noise: DecoderTotalitySpec's proto_stats row
   }
 
   test("proto: a 10-byte varint encoding of a negative value parses " +
@@ -141,11 +129,7 @@ class WireCodecsSpec extends AnyFunSuite {
     val good = Zstd.synth(0L)
     val bad = good.clone(); bad(4) = (bad(4) | 0x08).toByte
     assert(Zstd.frameMeta(bad).kind === "malformed")
-    for (i <- good.indices) {
-      Zstd.frameMeta(good.take(i)) // must not throw
-      val f = good.clone(); f(i) = (f(i) ^ 0x5a).toByte
-      Zstd.frameMeta(f)
-    }
+    // truncations and flips: DecoderTotalitySpec's zstd_frame_meta row
   }
 
   test("zstd triage: 2-byte content size carries the +256 bias; " +

@@ -12,8 +12,8 @@ import graft.functions.ZstdCodec
   *   - reference-compressed frames at several levels (which exercise
   *     repeat offsets, treeless literals, custom FSE tables, RLE
   *     blocks, 4-stream Huffman) must decode with our decoder.
-  * Plus truncation/bit-flip fuzz pinning the permissive-null contract
-  * and multi-frame/skippable walking. */
+  * Plus truncation/bit-flip checks that damage is null, never a wrong
+  * answer, and multi-frame/skippable walking. */
 class ZstdCodecSpec extends AnyFunSuite {
 
   private def lcgBytes(seed: Long, n: Int, alphabet: Int): Array[Byte] = {
@@ -117,21 +117,16 @@ class ZstdCodecSpec extends AnyFunSuite {
   test("truncation at every byte -> null (never a wrong answer)") {
     val src = textLike(30, 3000)
     val frame = ZstdCodec.compress(src, explicitTables = true)
-    for (k <- 0 until frame.length) {
-      val cut = frame.take(k)
-      val r = ZstdCodec.decompress(cut)
-      assert(r.isEmpty, s"truncated at $k decoded to Some")
-    }
+    for (cut <- Mutations.truncations(frame))
+      assert(ZstdCodec.decompress(cut).isEmpty, s"truncated at ${cut.length} decoded to Some")
   }
 
   test("single-byte corruption -> null or the original (checksum gate)") {
     val src = textLike(31, 2000)
     val frame = ZstdCodec.compress(src, explicitTables = false)
-    for (k <- 0 until frame.length) {
-      val bad = frame.clone()
-      bad(k) = (bad(k) ^ 0x41).toByte
+    for (bad <- Mutations.bitFlips(frame, 8 * frame.length, 41L)) {
       val r = ZstdCodec.decompress(bad)
-      assert(r.isEmpty || r.exists(_.sameElements(src)), s"flip at $k")
+      assert(r.isEmpty || r.exists(_.sameElements(src)), s"flip in ${bad.toSeq}")
     }
   }
 
@@ -221,23 +216,10 @@ class ZstdCodecSpec extends AnyFunSuite {
   }
 
   test("pure-random blobs never throw and never 'decode' (10k fuzz)") {
-    var s = 42L
-    for (k <- 0 until 10000) {
-      s = s * 6364136223846793005L + 1442695040888963407L
-      val len = ((s >>> 33) % 64).toInt
-      val blob = new Array[Byte](len)
-      var i = 0
-      while (i < len) {
-        s = s * 6364136223846793005L + 1442695040888963407L
-        blob(i) = (s >>> 33).toByte
-        i += 1
-      }
-      // magic-prefixed variant: forces the frame parser deep in
-      val framed = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte) ++ blob
-      assert(ZstdCodec.decompress(blob).isEmpty ||
-        blob.take(4).sameElements(Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte)))
-      ZstdCodec.decompress(framed) // must not throw; usually None
-    }
+    // each blob also comes magic-prefixed, which forces the frame parser deep in
+    val magic = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte)
+    for (blob <- Mutations.randomBlobs(10000, 42L, magic))
+      assert(ZstdCodec.decompress(blob).isEmpty || blob.startsWith(magic))
   }
 
   test("decompression bombs hit the admission cap, not the heap") {
