@@ -39,10 +39,10 @@ object Bench {
   // answerable from the artifact alone. Additive field; the env
   // contract and every existing field stay byte-compatible. Rendered
   // from the same constants the timing loop reads.
-  def protocolField(prejitOn: Boolean): String =
+  def protocolField: String =
     s""""protocol":{"timed_action":"count",""" +
       s""""warmup_sf":"${new java.io.File(WarmupDir).getName}",""" +
-      s""""prejit":${prejitOn},""" +
+      s""""prejit":true,""" +
       s""""prejit_reps_floor_justified":$PreJitRepsFloorJustified,""" +
       s""""prejit_reps_other":$PreJitRepsOther,"rerun_secs":$RerunSecs,""" +
       s""""hard_budget_secs":${Explain.HardBudgetSecs},""" +
@@ -179,25 +179,21 @@ object Bench {
       "q_bradley_terry", "q_weighted_quartiles", "q_quantile_normalize",
       "q_minhash_accuracy", "q_assoc_rules", "q_partition_prune",
       "q_weighted_median", "q_novelty", "q_dedup_keep_best")
-    // SPARK_GRAFT_PREJIT=off disables the pass entirely — the A/B knob
-    // for the drift hypothesis "the pre-JIT pass itself dirties the JVM
-    // the driver then times" (round-12 verdict #2/#3). Round-13: the
-    // iterative FloorJustified heavies run TWICE — TimeQ shows a single
+    // The pass always runs: its round-14 A/B on one tree timed the
+    // suite at 219.72 s with it and 272.03 s without. The iterative
+    // FloorJustified heavies run TWICE — TimeQ shows a single
     // target-SF run leaves them far from C2 steady state (q_sssp
     // rep1 10.97 s -> rep5 3.77 s on a quiet host; BENCH_r12 timed it
     // at 6.28 s right after a single warm run).
-    val prejitOn = !sys.env.get("SPARK_GRAFT_PREJIT").contains("off")
-    if (prejitOn) {
-      preJit.foreach { n =>
-        SparkEntry.queries.get(n).foreach { fn =>
-          val reps =
-            if (Explain.FloorJustified(n)) PreJitRepsFloorJustified else PreJitRepsOther
-          var r = 0
-          while (r < reps) {
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-            scrub(); maybeGc()
-            r += 1
-          }
+    preJit.foreach { n =>
+      SparkEntry.queries.get(n).foreach { fn =>
+        val reps =
+          if (Explain.FloorJustified(n)) PreJitRepsFloorJustified else PreJitRepsOther
+        var r = 0
+        while (r < reps) {
+          try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+          scrub(); maybeGc()
+          r += 1
         }
       }
     }
@@ -280,7 +276,6 @@ object Bench {
       if (lateRechecked.isEmpty) ""
       else lateRechecked.map("\"" + _ + "\"")
         .mkString("\"late_rechecks\":[", ",", "],")
-    val protocol = protocolField(prejitOn)
     val jvmField = s""""jvm":{"start":$jvmStart,"end":${jvmSnapshot()}}"""
     def fmt(v: Double): String = f"$v%.3f"
     val qs = finalResults.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
@@ -292,7 +287,7 @@ object Bench {
     // Full per-query detail: one line for humans + a file for tooling.
     val warmField = preJit.map("\"" + _ + "\"").mkString("\"warm_input\":[", ",", "],")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,$hygieneWarning$warmField$lateField$protocol$jvmField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"errors":$errors,$hygieneWarning$warmField$lateField$protocolField$jvmField,"sf":"$sfDir"}"""
     println(fullLine)
     try {
       val p = java.nio.file.Paths.get("target/bench_full.json")
@@ -319,7 +314,7 @@ object Bench {
     val qsTop = slowest.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qsTop,"errors":$errors,$hygieneWarning$lateField$protocol$jvmField,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qsTop,"errors":$errors,$hygieneWarning$lateField$protocolField$jvmField,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.avro
 
-import org.apache.avro.Schema
+import org.apache.avro.{Schema, SchemaCompatibility}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -66,6 +67,7 @@ case class FromAvroDatum(child: Expression, schemaJson: String)
     extends UnaryExpression with CodegenFallback {
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val structType = AvroOcf.sparkTypeFor(avroSchema)
+  @transient private lazy val reader = AvroOcf.resolvingReader(avroSchema, avroSchema)
 
   override def dataType: DataType = structType
   override def nullable: Boolean = true
@@ -74,9 +76,11 @@ case class FromAvroDatum(child: Expression, schemaJson: String)
     case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"from_avro_datum expects binary input, got $other")
   }
-  override def nullSafeEval(input: Any): Any =
-    try AvroOcf.decodeDatumRow(input.asInstanceOf[Array[Byte]], structType, avroSchema)
+  override def nullSafeEval(input: Any): Any = {
+    val bytes = input.asInstanceOf[Array[Byte]]
+    try AvroOcf.decodeDatum(bytes, 0, bytes.length, reader, structType)
     catch { case _: Exception => null }
+  }
   override protected def withNewChildInternal(newChild: Expression): FromAvroDatum =
     copy(child = newChild)
   override def prettyName: String = "from_avro_datum"
@@ -130,27 +134,28 @@ case class ToAvroConfluent(child: Expression, schemaJson: String, schemaId: Int)
   * snapshot; live: an HTTP client — either way bounded by schema
   * VERSIONS, never by data volume), and decode resolves writer→reader
   * per the Avro spec, so consumers keep working across producer schema
-  * evolution. Parsed writer schemas are cached per (executor, id), so
-  * the resolver — including a live client's remote fetch — is hit once
-  * per new id, like the official client's identity cache. Null on
-  * wrong magic, unknown id, or datum decode failure (PERMISSIVE → DLQ,
-  * like the OCF path). */
+  * evolution. The writer→reader reader is prepared once per (executor,
+  * id), so the resolver — including a live client's remote fetch — is
+  * hit once per new id, like the official client's identity cache. Null
+  * on wrong magic, unknown id, or datum decode failure (PERMISSIVE →
+  * DLQ, like the OCF path). */
 case class FromAvroConfluent(child: Expression, readerSchemaJson: String,
     registry: SchemaRegistryResolver)
     extends UnaryExpression with CodegenFallback {
   @transient private lazy val readerSchema = new Schema.Parser().parse(readerSchemaJson)
   @transient private lazy val structType = AvroOcf.sparkTypeFor(readerSchema)
   // cache-miss path: resolve (a live client fetches here) → parse →
-  // cache; an unknown id re-resolves per call, which is what a live
-  // client's negative-lookup does too (the id may appear in the
+  // prepare → cache; an unknown id re-resolves per call, which is what
+  // a live client's negative-lookup does too (the id may appear in the
   // registry seconds later)
-  @transient private lazy val writerCache =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Schema]()
-  private def writerFor(id: Int): Option[Schema] =
-    Option(writerCache.get(id)).orElse {
-      val parsed = registry.resolve(id).map(js => new Schema.Parser().parse(js))
-      parsed.foreach(sc => writerCache.putIfAbsent(id, sc))
-      parsed
+  @transient private lazy val readers =
+    new java.util.concurrent.ConcurrentHashMap[Integer, GenericDatumReader[GenericRecord]]()
+  private def readerFor(id: Int): Option[GenericDatumReader[GenericRecord]] =
+    Option(readers.get(id)).orElse {
+      val prepared = registry.resolve(id).map(js =>
+        AvroOcf.resolvingReader(new Schema.Parser().parse(js), readerSchema))
+      prepared.foreach(r => readers.putIfAbsent(id, r))
+      prepared
     }
 
   override def dataType: DataType = structType
@@ -164,10 +169,10 @@ case class FromAvroConfluent(child: Expression, readerSchemaJson: String,
     val bytes = input.asInstanceOf[Array[Byte]]
     val id = AvroOcf.confluentSchemaId(bytes)
     if (id < 0) return null
-    writerFor(id) match {
+    readerFor(id) match {
       case None => null
-      case Some(writer) =>
-        try AvroOcf.decodeDatumRowResolved(bytes, 5, structType, writer, readerSchema)
+      case Some(reader) =>
+        try AvroOcf.decodeDatum(bytes, 5, bytes.length - 5, reader, structType)
         catch { case _: Exception => null }
     }
   }
@@ -177,7 +182,7 @@ case class FromAvroConfluent(child: Expression, readerSchemaJson: String,
 }
 
 /** `avro_can_read(writer_json, reader_json)` -> boolean: Avro spec
-  * schema-resolution compatibility ([[SchemaCompat.canRead]]) as a
+  * schema-resolution compatibility ([[AvroCanRead.canRead]]) as a
   * row-level predicate — the shape a registry-dump audit needs
   * (subjects × versions is a real table; each check is metadata-cheap).
   * Parsed schemas are cached per-executor keyed by the JSON text:
@@ -196,7 +201,7 @@ case class AvroCanRead(left: Expression, right: Expression)
       s"avro_can_read expects (string, string) schema JSON, got $other")
   }
   override def nullSafeEval(w: Any, r: Any): Any =
-    try java.lang.Boolean.valueOf(SchemaCompat.canRead(
+    try java.lang.Boolean.valueOf(AvroCanRead.canRead(
       AvroCanRead.parse(w.toString), AvroCanRead.parse(r.toString)))
     catch { case _: Exception => null }
   override protected def withNewChildrenInternal(
@@ -206,6 +211,15 @@ case class AvroCanRead(left: Expression, right: Expression)
 }
 
 object AvroCanRead {
+  /** Can data written with `writer` be read as `reader`? The verdict of
+    * `SchemaCompatibility`, the checker of the library whose
+    * `GenericDatumReader` resolves every decode
+    * ([[AvroOcf.resolvingReader]]); SchemaCompatSpec checks that a true
+    * verdict decodes. The library takes (reader, writer). */
+  def canRead(writer: Schema, reader: Schema): Boolean =
+    SchemaCompatibility.checkReaderWriterCompatibility(reader, writer).getType ==
+      SchemaCompatibility.SchemaCompatibilityType.COMPATIBLE
+
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Schema]()
   private def parse(js: String): Schema = {
     if (cache.size > 4096) cache.clear() // registry histories are tiny; cap defensively
@@ -290,39 +304,42 @@ object functions {
   def avro_framing(c: Column): Column =
     ColumnBridge.column(AvroFraming(ColumnBridge.expression(c)))
 
-  /** Register all four for SQL use: `from_avro_ocf(col, 'schema-json')`. */
+  private def stringLit(e: Expression): String = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(s, StringType) if s != null => s.toString
+    case other => throw new IllegalArgumentException(s"schema must be a string literal, got $other")
+  }
+  private def intLit(e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v, IntegerType) if v != null =>
+      v.asInstanceOf[Int]
+    case other => throw new IllegalArgumentException(s"schema id must be an int literal, got $other")
+  }
+
+  /** Every Avro SQL function: its name, expression class and builder.
+    * [[register]] and `graft.plans.GraftExtensions` both read this
+    * table, so a plain session and an extension session resolve the
+    * same functions. The SQL confluent pair covers the single-version
+    * case (id -> the reader schema itself); the multi-version registry
+    * map is the Scala API's job. */
+  private[graft] val sqlFunctions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("from_avro_ocf", classOf[FromAvroOcf], es => FromAvroOcf(es.head, stringLit(es(1)))),
+      ("to_avro_ocf", classOf[ToAvroOcf], es => ToAvroOcf(es.head, stringLit(es(1)))),
+      ("from_avro_datum", classOf[FromAvroDatum], es => FromAvroDatum(es.head, stringLit(es(1)))),
+      ("to_avro_datum", classOf[ToAvroDatum], es => ToAvroDatum(es.head, stringLit(es(1)))),
+      ("to_avro_confluent", classOf[ToAvroConfluent],
+        es => ToAvroConfluent(es.head, stringLit(es(1)), intLit(es(2)))),
+      ("from_avro_confluent", classOf[FromAvroConfluent],
+        es => FromAvroConfluent(es.head, stringLit(es(1)),
+          StaticSchemaRegistry(Map(intLit(es(2)) -> stringLit(es(1)))))),
+      ("avro_can_read", classOf[AvroCanRead], es => AvroCanRead(es.head, es(1))),
+      ("avro_framing", classOf[AvroFraming], es => AvroFraming(es.head)))
+
+  /** Register every [[sqlFunctions]] entry for SQL use:
+    * `from_avro_ocf(col, 'schema-json')`. */
   def register(spark: SparkSession): Unit = register(spark.sessionState.functionRegistry)
 
-  def register(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
-    def lit(e: Expression): String = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(s, StringType) if s != null => s.toString
-      case other => throw new IllegalArgumentException(s"schema must be a string literal, got $other")
+  def register(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
     }
-    reg.createOrReplaceTempFunction(
-      "from_avro_ocf", es => FromAvroOcf(es.head, lit(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "to_avro_ocf", es => ToAvroOcf(es.head, lit(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "from_avro_datum", es => FromAvroDatum(es.head, lit(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "to_avro_datum", es => ToAvroDatum(es.head, lit(es(1))), "scala_udf")
-    def intLit(e: Expression): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, IntegerType) if v != null =>
-        v.asInstanceOf[Int]
-      case other => throw new IllegalArgumentException(s"schema id must be an int literal, got $other")
-    }
-    // SQL surface covers the single-version case (id -> same schema as
-    // reader); the multi-version registry map is the Scala API's job
-    reg.createOrReplaceTempFunction(
-      "to_avro_confluent", es => ToAvroConfluent(es.head, lit(es(1)), intLit(es(2))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "from_avro_confluent",
-      es => FromAvroConfluent(es.head, lit(es(1)),
-        StaticSchemaRegistry(Map(intLit(es(2)) -> lit(es(1))))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "avro_can_read", es => AvroCanRead(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "avro_framing", es => AvroFraming(es.head), "scala_udf")
-  }
 }

@@ -301,34 +301,28 @@ object AvroOcf {
     out.toByteArray
   }
 
-  /** RAW datum bytes -> InternalRow, written with the reader schema
-    * itself (Avro's one-schema reader is writer = reader). Throws on
-    * malformed input; callers choose null-on-error (PERMISSIVE). */
-  def decodeDatumRow(bytes: Array[Byte], sparkType: StructType, readerSchema: Schema): InternalRow =
-    decodeDatumRowResolved(bytes, 0, sparkType, readerSchema, readerSchema)
-
-  /** Datum bytes at an offset, resolved from a WRITER schema through a
-    * READER schema (Avro spec schema resolution — the Confluent wire
-    * format's decode path, where the writer schema comes from the
-    * registry id embedded in the frame). */
-  def decodeDatumRowResolved(bytes: Array[Byte], offset: Int, sparkType: StructType,
-      writerSchema: Schema, readerSchema: Schema): InternalRow =
-    readDatum(bytes, offset, bytes.length - offset,
-      new GenericDatumReader[GenericRecord](writerSchema, readerSchema), sparkType, readerSchema)
+  /** The reader that resolves data written with `writer` into `reader`
+    * (Avro spec schema resolution, by the library whose checker
+    * `avro_can_read` asks). Every framing prepares its reader here,
+    * once: OCF per distinct header ([[preparedFor]]), raw datum per
+    * expression, Confluent per schema id. */
+  def resolvingReader(writer: Schema, reader: Schema): GenericDatumReader[GenericRecord] =
+    new GenericDatumReader[GenericRecord](writer, reader)
 
   /** The datum decode every framing (OCF, raw datum, Confluent) ends
-    * in: the first datum of `bytes[off, off + len)`, read by `reader`
-    * (whose schema is the writer's). [[checkDatum]] walks the datum
-    * first, so `GenericDatumReader` never allocates for a declared
-    * length the bytes cannot hold. */
-  private def readDatum(bytes: Array[Byte], off: Int, len: Int,
-      reader: GenericDatumReader[GenericRecord], sparkType: StructType,
-      readerSchema: Schema): InternalRow = {
+    * in: the first datum of `bytes[off, off + len)`, read by a
+    * [[resolvingReader]] into a row of `sparkType` (the Spark type of
+    * its reader schema). [[checkDatum]] walks the datum against the
+    * writer schema first, so `GenericDatumReader` never allocates for a
+    * declared length the bytes cannot hold. Throws on malformed input;
+    * callers choose null-on-error (PERMISSIVE). */
+  def decodeDatum(bytes: Array[Byte], off: Int, len: Int,
+      reader: GenericDatumReader[GenericRecord], sparkType: StructType): InternalRow = {
     if (off < 0 || len < 0 || off > bytes.length - len)
       throw new IllegalArgumentException("truncated avro datum")
     checkDatum(new Cursor(bytes, off, off + len), reader.getSchema, 0)
     val dec = org.apache.avro.io.DecoderFactory.get().binaryDecoder(bytes, off, len, null)
-    recordToRow(reader.read(null, dec), sparkType, readerSchema)
+    recordToRow(reader.read(null, dec), sparkType, reader.getExpected)
   }
 
   /** Walks one datum of writer schema `s` and checks, before anything
@@ -467,10 +461,10 @@ object AvroOcf {
           bytes, syncAt, syncAt + SyncSize))
       throw new IllegalArgumentException("Invalid sync!")
     if (prepared.codec == null)
-      readDatum(bytes, c.pos, size, prepared.reader, sparkType, readerSchema)
+      decodeDatum(bytes, c.pos, size, prepared.reader, sparkType)
     else {
       val block = inflate(prepared.codec, bytes, c.pos, size)
-      readDatum(block, 0, block.length, prepared.reader, sparkType, readerSchema)
+      decodeDatum(block, 0, block.length, prepared.reader, sparkType)
     }
   }
 
@@ -561,7 +555,7 @@ object AvroOcf {
       val header = new DataFileStream[GenericRecord](
         new ByteArrayInputStream(bytes, 0, syncAt + SyncSize), new GenericDatumReader[GenericRecord]())
       val codec = header.getMetaString(org.apache.avro.file.DataFileConstants.CODEC)
-      hit = new Prepared(new GenericDatumReader[GenericRecord](header.getSchema, readerSchema),
+      hit = new Prepared(resolvingReader(header.getSchema, readerSchema),
         if (codec == org.apache.avro.file.DataFileConstants.NULL_CODEC) null else codec)
       if (preparedReaders.size >= PreparedBound) preparedReaders.clear()
       preparedReaders.put(new HeaderKey(java.util.Arrays.copyOf(bytes, syncAt), syncAt, readerSchema), hit)

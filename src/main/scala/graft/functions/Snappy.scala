@@ -109,7 +109,10 @@ object Snappy {
       shift += 7
       more = (v & 0x80) != 0
     }
-    if (expect > Limits.SnappyOut) return None
+    // each element yields at most 64 bytes per 3 stream bytes (a tag-2
+    // copy), so a preamble the rest of the stream cannot fill is
+    // refused before its buffer is allocated
+    if (expect > Limits.SnappyOut || expect > 22L * (b.length - p)) return None
     val n = expect.toInt
     val out = new Array[Byte](n)
     var o = 0

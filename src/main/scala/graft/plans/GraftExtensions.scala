@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.StringType
 
 import graft.avro.{AvroOcf, FromAvroDatum, FromAvroOcf, ToAvroDatum, ToAvroOcf}
 
@@ -70,7 +69,8 @@ object CodecRoundTripElimination extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions: register the codec SQL functions, the
+/** Session extensions: register the Avro SQL functions
+  * (`graft.avro.functions.sqlFunctions`) and the kernel functions, the
   * round-trip elimination rule, and the native as-of join planner
   * strategy. Activate with
   * `spark.sql.extensions=graft.plans.GraftExtensions` or
@@ -80,22 +80,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => CodecRoundTripElimination)
     e.injectOptimizerRule(_ => AsofFilterPushdown)
     e.injectPlannerStrategy(_ => AsofJoinStrategy)
-    def litStr(x: org.apache.spark.sql.catalyst.expressions.Expression): String = x match {
-      case Literal(s, StringType) if s != null => s.toString
-      case other => throw new IllegalArgumentException(s"schema must be a string literal: $other")
+    graft.avro.functions.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls.getName, name),
+        build))
     }
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("from_avro_ocf"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FromAvroOcf].getName, "from_avro_ocf"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FromAvroOcf(es.head, litStr(es(1)))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("to_avro_ocf"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ToAvroOcf].getName, "to_avro_ocf"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ToAvroOcf(es.head, litStr(es(1)))))
     def litInt(x: org.apache.spark.sql.catalyst.expressions.Expression): Int = x match {
       case Literal(i: Int, org.apache.spark.sql.types.IntegerType) => i
       case other => throw new IllegalArgumentException(s"expected int literal: $other")

@@ -276,54 +276,61 @@ private[graft] trait ParityQueries { this: SparkEntry.type =>
       .orderBy(col("order_key"))
   }
 
-  /** Schema-registry promotion audit: a nine-version subject history
-    * exercising every Avro resolution rule (add-with-default,
-    * add-without-default, float→double promotion, field drop,
-    * `[null,T]` wrap, a retype, enum symbol widening), with each
+  /** A nine-version subject history exercising every Avro resolution
+    * rule (add-with-default, add-without-default, float→double
+    * promotion, field drop, `[null,T]` wrap, a retype, enum symbol
+    * widening), as (name, schema JSON) in version order. */
+  private[graft] val schemaHistory: Seq[(String, String)] = {
+    def rec(fields: String*): String =
+      s"""{"type":"record","name":"Order","fields":[${fields.mkString(",")}]}"""
+    Seq(
+      "v1_base" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":"float"}"""),
+      "v2_add_default" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":"float"}""",
+        """{"name":"currency","type":"string","default":"USD"}"""),
+      "v3_add_no_default" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":"float"}""",
+        """{"name":"region","type":"string"}"""),
+      "v4_promote" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":"double"}"""),
+      "v5_drop_field" -> rec(
+        """{"name":"id","type":"string"}"""),
+      "v6_nullable_union" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":["null","float"],"default":null}"""),
+      "v7_retype" -> rec(
+        """{"name":"id","type":"int"}""",
+        """{"name":"price","type":"float"}"""),
+      "v8_enum" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":"float"}""",
+        """{"name":"status","type":{"type":"enum","name":"St","symbols":["A","B"]},"default":"A"}"""),
+      "v9_enum_widened" -> rec(
+        """{"name":"id","type":"string"}""",
+        """{"name":"price","type":"float"}""",
+        """{"name":"status","type":{"type":"enum","name":"St","symbols":["A","B","C"]},"default":"A"}"""))
+  }
+
+  /** Schema-registry promotion audit over [[schemaHistory]]: each
     * consecutive promotion classified BACKWARD / FORWARD / FULL /
     * BREAKING from the `avro_can_read` predicate — the gate a registry
-    * runs before accepting a version (SchemaCompat is pinned against
-    * org.apache.avro.SchemaCompatibility by SchemaCompatSpec; the
-    * oracle states the Avro-spec truth table explicitly). The catalog
-    * is metadata (bounded by version history), so this shape audits a
-    * registry DUMP of any subject count: per-row schema parses are
-    * executor-cached and the self-join key is the adjacent version. */
+    * runs before accepting a version (`avro_can_read` asks
+    * org.apache.avro.SchemaCompatibility, the library that resolves
+    * every decode; the oracle states the Avro-spec truth table
+    * explicitly). The catalog is metadata (bounded by version history),
+    * so this shape audits a registry DUMP of any subject count: per-row
+    * schema parses are executor-cached and the self-join key is the
+    * adjacent version. */
   private[graft] def qSchemaCompat(s: SparkSession, dir: String): DataFrame = {
     import graft.avro.functions.avro_can_read
     import s.implicits._
-    def rec(fields: String*): String =
-      s"""{"type":"record","name":"Order","fields":[${fields.mkString(",")}]}"""
-    val catalog = Seq(
-      (1L, "v1_base", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":"float"}""")),
-      (2L, "v2_add_default", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":"float"}""",
-        """{"name":"currency","type":"string","default":"USD"}""")),
-      (3L, "v3_add_no_default", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":"float"}""",
-        """{"name":"region","type":"string"}""")),
-      (4L, "v4_promote", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":"double"}""")),
-      (5L, "v5_drop_field", rec(
-        """{"name":"id","type":"string"}""")),
-      (6L, "v6_nullable_union", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":["null","float"],"default":null}""")),
-      (7L, "v7_retype", rec(
-        """{"name":"id","type":"int"}""",
-        """{"name":"price","type":"float"}""")),
-      (8L, "v8_enum", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":"float"}""",
-        """{"name":"status","type":{"type":"enum","name":"St","symbols":["A","B"]},"default":"A"}""")),
-      (9L, "v9_enum_widened", rec(
-        """{"name":"id","type":"string"}""",
-        """{"name":"price","type":"float"}""",
-        """{"name":"status","type":{"type":"enum","name":"St","symbols":["A","B","C"]},"default":"A"}""")))
+    val catalog = schemaHistory.zipWithIndex
+      .map { case ((name, js), i) => (i + 1L, name, js) }
       .toDF("version", "name", "schema_json")
     val prev = catalog.select(col("version").as("v"), col("name").as("prev_name"),
       col("schema_json").as("prev_js"))

@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.MultiSinkParquet
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -44,8 +44,13 @@ object OrderPipeline {
   /** S5 + P1/P2: decode the Avro value, surface payload + metadata.
     * Decode failure yields a null struct -> routed permanent (R4). */
   def decode(envelopes: DataFrame): DataFrame =
+    withOrder(envelopes, from_avro_ocf(col("value"), Schemas.orderAvroJson))
+
+  /** The decoded `order` struct and the fields routing reads from it,
+    * whichever framing `order` was decoded from. */
+  private def withOrder(envelopes: DataFrame, order: Column): DataFrame =
     envelopes
-      .withColumn("order", from_avro_ocf(col("value"), Schemas.orderAvroJson))
+      .withColumn("order", order)
       .withColumn("orderId", col("order.orderId"))
       .withColumn("product", col("order.product"))
       .withColumn("price", col("order.price").cast("double"))
@@ -65,12 +70,8 @@ object OrderPipeline {
   def decodeConfluent(envelopes: DataFrame,
       writerSchemasById: Map[Int, String],
       readerSchemaJson: String = Schemas.orderAvroJson): DataFrame =
-    envelopes
-      .withColumn("order", graft.avro.functions.from_avro_confluent(
-        col("value"), readerSchemaJson, writerSchemasById))
-      .withColumn("orderId", col("order.orderId"))
-      .withColumn("product", col("order.product"))
-      .withColumn("price", col("order.price").cast("double"))
+    withOrder(envelopes, graft.avro.functions.from_avro_confluent(
+      col("value"), readerSchemaJson, writerSchemasById))
 
   /** [[process]] over a Confluent-framed topic. */
   def processConfluent(envelopes: DataFrame,

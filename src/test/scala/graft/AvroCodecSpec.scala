@@ -118,6 +118,7 @@ class AvroCodecSpec extends SparkSpec {
   }
 
   test("property: raw-datum round-trip is the identity, datum is the OCF payload") {
+    val datumReader = AvroOcf.resolvingReader(schema, schema)
     val genOrder = for {
       id <- Gen.identifier
       product <- Gen.alphaNumStr
@@ -129,7 +130,7 @@ class AvroCodecSpec extends SparkSpec {
         org.apache.spark.unsafe.types.UTF8String.fromString(product),
         price)
       val datum = AvroOcf.encodeDatumRow(row, Schemas.order, schema)
-      val back = AvroOcf.decodeDatumRow(datum, Schemas.order, schema)
+      val back = AvroOcf.decodeDatum(datum, 0, datum.length, datumReader, Schemas.order)
       val ocf = AvroOcf.encodeRow(row, Schemas.order, schema)
       // the raw datum is byte-identical to the OCF's payload slice
       // (header .. sync), i.e. the framing carries ONLY overhead
@@ -399,7 +400,7 @@ class AvroCodecSpec extends SparkSpec {
     got.foreach(r => assert(r.getString(0) === r.getString(1), r.toString))
   }
 
-  test("avro_can_read SQL surface agrees with SchemaCompat on a promotion pair") {
+  test("avro_can_read SQL surface agrees with the library checker on a promotion pair") {
     A.register(spark)
     val v2 =
       """{"type":"record","namespace":"com.assignment","name":"Order","fields":[

@@ -15,8 +15,6 @@ class BenchProtocolSpec extends AnyFunSuite {
       """warm+timed min for non-exempt rows past hard budget"},"""
 
   test("the protocol field renders byte for byte as before (bench_closing.json)") {
-    assert(Bench.protocolField(prejitOn = true) === stamp)
-    assert(Bench.protocolField(prejitOn = false) ===
-      stamp.replace(""""prejit":true""", """"prejit":false"""))
+    assert(Bench.protocolField === stamp)
   }
 }

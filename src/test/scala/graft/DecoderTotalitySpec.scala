@@ -196,6 +196,16 @@ class DecoderTotalitySpec extends AnyFunSuite {
     assert(maxAlloc <= 2L * MaxBytes, s"one call allocated ${maxAlloc >> 20} MiB")
   }
 
+  test("snappy_decompress: a forged 64 MiB preamble is refused before its buffer is allocated") {
+    def varint(n: Long): Array[Byte] =
+      if (n < 0x80) Array(n.toByte) else ((n & 0x7f) | 0x80).toByte +: varint(n >>> 7)
+    val seed = Snappy.compress(text)
+    val forged = varint(Limits.SnappyOut) ++ seed.drop(seed.indexWhere(_ >= 0) + 1)
+    assert(Snappy.decompress(forged).isEmpty)
+    val allocated = Mutations.allocatedBy(Snappy.decompress(forged))
+    assert(allocated < (1L << 20), s"one call allocated ${allocated >> 10} KiB")
+  }
+
   test("tiff_stats: u32 sides whose product wraps negative decode to null") {
     // 110 bytes, little-endian, 8 entries: ImageWidth 0xFFFFFFFF,
     // ImageLength 0x80000001, 8-bit grey, uncompressed, one strip

@@ -1,17 +1,22 @@
 package graft
 
 import org.apache.avro.{Schema, SchemaCompatibility}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.avro.SchemaCompat
+import graft.avro.{AvroCanRead, FromAvroConfluent, StaticSchemaRegistry, ToAvroConfluent}
 import graft.model.Schemas
 
-/** SchemaCompat is an independent re-derivation of the Avro spec's
-  * schema-resolution rules; this spec pins it against the library's own
-  * checker (org.apache.avro.SchemaCompatibility) — on a curated
-  * evolution catalog exercising every rule, and on ScalaCheck-generated
-  * record pairs. */
+/** `avro_can_read` asks the library's own checker
+  * (org.apache.avro.SchemaCompatibility, which takes reader before
+  * writer); this spec pins its verdicts and its writer/reader argument
+  * order on a curated evolution catalog exercising every rule and on
+  * ScalaCheck-generated record pairs, and checks that a true verdict
+  * decodes. */
 class SchemaCompatSpec extends AnyFunSuite {
 
   private def parse(js: String) = new Schema.Parser().parse(js)
@@ -20,53 +25,57 @@ class SchemaCompatSpec extends AnyFunSuite {
     SchemaCompatibility.checkReaderWriterCompatibility(reader, writer)
       .getType == SchemaCompatibility.SchemaCompatibilityType.COMPATIBLE
 
+  /** `avro_can_read(writer, reader)` evaluated as SQL evaluates it. */
+  private def canRead(writerJson: String, readerJson: String): Boolean =
+    AvroCanRead(Literal(writerJson), Literal(readerJson)).eval() match {
+      case b: java.lang.Boolean => b
+      case other => fail(s"avro_can_read gave $other")
+    }
+  private def canRead(writer: Schema, reader: Schema): Boolean =
+    canRead(writer.toString, reader.toString)
+
   private def rec(fields: String*): String =
     s"""{"type":"record","name":"Order","fields":[${fields.mkString(",")}]}"""
 
-  /** The registry-subject evolution catalog: every rule has a case. */
-  private val catalog: Seq[(String, String)] = Seq(
-    "v1_base" -> rec(
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":"float"}"""),
-    "v2_add_default" -> rec( // BACKWARD ok (new reads old via default)
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":"float"}""",
-      """{"name":"currency","type":"string","default":"USD"}"""),
-    "v3_add_no_default" -> rec( // new cannot read old
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":"float"}""",
-      """{"name":"region","type":"string"}"""),
-    "v4_promote" -> rec( // float->double promotion: reads v1
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":"double"}"""),
-    "v5_drop_field" -> rec( // reads v1 (skips price); v1 cannot read it
-      """{"name":"id","type":"string"}"""),
-    "v6_nullable_union" -> rec( // [null,T] union accepting T
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":["null","float"],"default":null}"""),
-    "v7_retype" -> rec( // string -> int: incompatible both ways
-      """{"name":"id","type":"int"}""",
-      """{"name":"price","type":"float"}"""),
-    "v8_enum" -> rec(
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":"float"}""",
-      """{"name":"status","type":{"type":"enum","name":"St","symbols":["A","B"]},"default":"A"}"""),
-    "v9_enum_widened" -> rec( // reader knows every writer symbol of v8
-      """{"name":"id","type":"string"}""",
-      """{"name":"price","type":"float"}""",
-      """{"name":"status","type":{"type":"enum","name":"St","symbols":["A","B","C"]},"default":"A"}"""))
+  /** The registry-subject evolution catalog of q_schema_compat: every
+    * rule has a case. */
+  private val catalog: Seq[(String, String)] = SparkEntry.schemaHistory
 
   test("catalog matrix agrees with org.apache.avro.SchemaCompatibility both ways") {
     for ((wn, wj) <- catalog; (rn, rj) <- catalog) {
       val (w, r) = (parse(wj), parse(rj))
-      assert(SchemaCompat.canRead(w, r) === libCanRead(w, r),
+      assert(canRead(wj, rj) === libCanRead(w, r),
         s"divergence from library: writer=$wn reader=$rn")
     }
   }
 
+  /** A record of struct type `t` whose every leaf the catalog's schemas
+    * can hold; "A" is a symbol of both St enums. */
+  private def sample(t: StructType): InternalRow = InternalRow.fromSeq(t.fields.toSeq.map(_.dataType match {
+    case StringType => UTF8String.fromString("A")
+    case IntegerType => 7
+    case FloatType => 1.5f
+    case DoubleType => 2.5
+    case other => fail(s"no sample value for $other")
+  }))
+
+  test("where avro_can_read is true, from_avro_confluent decodes the writer's record") {
+    // only this direction holds: a union writer into a non-union reader
+    // is incompatible to the checker, yet decodes its non-null data
+    val readable = for ((wn, wj) <- catalog; (rn, rj) <- catalog if canRead(wj, rj)) yield {
+      val writerType = graft.avro.AvroOcf.sparkTypeFor(parse(wj))
+      val framed = ToAvroConfluent(Literal(sample(writerType), writerType), wj, 1).eval()
+      val decoded = FromAvroConfluent(Literal(framed, BinaryType), rj,
+        StaticSchemaRegistry(Map(1 -> wj))).eval()
+      assert(decoded != null, s"writer=$wn reader=$rn: avro_can_read is true but the decode is null")
+      (wn, rn)
+    }
+    info(s"${readable.size} of ${catalog.size * catalog.size} pairs readable")
+    assert(readable.size > catalog.size, s"only the self-pairs were readable: $readable")
+  }
+
   test("catalog spot checks state the spec rules directly") {
-    def can(w: String, r: String) =
-      SchemaCompat.canRead(parse(byName(w)), parse(byName(r)))
+    def can(w: String, r: String) = canRead(byName(w), byName(r))
     assert(can("v1_base", "v2_add_default"), "added-with-default must be readable")
     assert(!can("v1_base", "v3_add_no_default"), "added-without-default must fail")
     assert(can("v1_base", "v4_promote"), "float->double promotion")
@@ -83,12 +92,17 @@ class SchemaCompatSpec extends AnyFunSuite {
   test("registry modes compose the primitive (BACKWARD/FORWARD/FULL)") {
     val v1 = byName("v1_base"); val v2 = byName("v2_add_default")
     val v4 = byName("v4_promote"); val v3 = byName("v3_add_no_default")
-    assert(SchemaCompat.backward(v1, v2) && SchemaCompat.forward(v1, v2),
+    // BACKWARD = the new version reads the previous one's data;
+    // FORWARD = the previous version reads the new one's; FULL = both
+    def backward(prev: String, next: String) = canRead(prev, next)
+    def forward(prev: String, next: String) = canRead(next, prev)
+    def full(prev: String, next: String) = backward(prev, next) && forward(prev, next)
+    assert(backward(v1, v2) && forward(v1, v2),
       "add-with-default is FULL compatible")
-    assert(SchemaCompat.full(v1, v2))
-    assert(SchemaCompat.backward(v1, v4) && !SchemaCompat.forward(v1, v4),
+    assert(full(v1, v2))
+    assert(backward(v1, v4) && !forward(v1, v4),
       "promotion is BACKWARD-only")
-    assert(!SchemaCompat.backward(v1, v3) && SchemaCompat.forward(v1, v3),
+    assert(!backward(v1, v3) && forward(v1, v3),
       "add-without-default is FORWARD-only")
   }
 
@@ -114,8 +128,7 @@ class SchemaCompatSpec extends AnyFunSuite {
       rec(uniq.toSeq: _*)
     }
     val prop = Prop.forAll(Gen.zip(genRecord, genRecord)) { case (wj, rj) =>
-      val (w, r) = (parse(wj), parse(rj))
-      SchemaCompat.canRead(w, r) == libCanRead(w, r)
+      canRead(wj, rj) == libCanRead(parse(wj), parse(rj))
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
@@ -135,9 +148,9 @@ class SchemaCompatSpec extends AnyFunSuite {
     val n3 = """{"type":"record","name":"N","fields":[
       |{"name":"f","type":{"type":"fixed","name":"F8","size":4}}]}"""
       .stripMargin.replace("\n", "")
-    assert(SchemaCompat.canRead(parse(n1), parse(n2)), "element/value promotion")
-    assert(!SchemaCompat.canRead(parse(n2), parse(n1)), "demotion fails")
-    assert(!SchemaCompat.canRead(parse(n1), parse(n3)), "fixed size mismatch")
+    assert(canRead(parse(n1), parse(n2)), "element/value promotion")
+    assert(!canRead(parse(n2), parse(n1)), "demotion fails")
+    assert(!canRead(parse(n1), parse(n3)), "fixed size mismatch")
     // and the library agrees on all three
     assert(libCanRead(parse(n1), parse(n2)) && !libCanRead(parse(n2), parse(n1))
       && !libCanRead(parse(n1), parse(n3)))
@@ -151,9 +164,9 @@ class SchemaCompatSpec extends AnyFunSuite {
       .stripMargin.replace("\n", "")
     val unrelated = """{"type":"record","name":"Other","fields":[
       |{"name":"id","type":"string"}]}""".stripMargin.replace("\n", "")
-    assert(SchemaCompat.canRead(parse(oldRec), parse(renamed)),
+    assert(canRead(parse(oldRec), parse(renamed)),
       "reader aliases must redirect both the record and the field rename")
-    assert(!SchemaCompat.canRead(parse(oldRec), parse(unrelated)),
+    assert(!canRead(parse(oldRec), parse(unrelated)),
       "no alias, different name: incompatible")
     // the library agrees on both
     assert(libCanRead(parse(oldRec), parse(renamed)))
@@ -169,13 +182,13 @@ class SchemaCompatSpec extends AnyFunSuite {
       graft.avro.AvroOcf.sparkTypeFor(parse(recursive))
     }
     assert(e.getMessage.contains("recursive record type"), e.getMessage)
-    // ...while SchemaCompat handles the same recursion co-inductively
-    assert(SchemaCompat.canRead(parse(recursive), parse(recursive)))
+    // ...while avro_can_read handles the same recursion
+    assert(canRead(parse(recursive), parse(recursive)))
   }
 
   test("the rich order schema reads itself and evolves by field drop") {
     val rich = parse(Schemas.richOrderAvroJson)
-    assert(SchemaCompat.canRead(rich, rich))
-    assert(SchemaCompat.canRead(parse(Schemas.orderAvroJson), parse(Schemas.orderAvroJson)))
+    assert(canRead(rich, rich))
+    assert(canRead(parse(Schemas.orderAvroJson), parse(Schemas.orderAvroJson)))
   }
 }

@@ -94,6 +94,17 @@ class SqlSurfaceSpec extends AnyFunSuite {
       "SELECT ogg_meta(cast('OggS nope' as binary)) IS NULL") === true)
   }
 
+  test("every Avro function resolves and evaluates through spark.sql") {
+    val js = graft.model.Schemas.orderAvroJson
+    val order = "named_struct('orderId', 'o-1', 'product', 'P', 'price', cast(2.5 as float))"
+    assert(one[Float](s"SELECT from_avro_ocf(to_avro_ocf($order, '$js'), '$js').price") === 2.5f)
+    assert(one[String](s"SELECT from_avro_datum(to_avro_datum($order, '$js'), '$js').orderId") === "o-1")
+    assert(one[String](
+      s"SELECT from_avro_confluent(to_avro_confluent($order, '$js', 3), '$js', 3).product") === "P")
+    assert(one[String](s"SELECT avro_framing(to_avro_confluent($order, '$js', 3))") === "confluent")
+    assert(one[Boolean](s"SELECT avro_can_read('$js', '$js')") === true)
+  }
+
   test("the asof planner strategy and codec-elimination rule ride the " +
     "same extension class (smoke: session plans a query)") {
     // a plain SQL round through the new session proves the injected
