@@ -25,12 +25,14 @@ import graft.sources.OrderGen
   * recorded next to the retained SLOW rows in BASELINE.md. */
 object ScaleProbe {
 
+  /** Wall seconds `f` takes. */
+  private def timed(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
   private def floorsMode(spark: SparkSession, baseEdges: Long,
       only: Option[String] = None): Unit = {
     import spark.implicits._
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // random multigraph with |V| = edges/4: expected degree ~8, so the
     // diameter (hence round count) is O(log V) and nearly constant
     // across the 10× step — exactly the iteration-floor regime the
@@ -218,9 +220,6 @@ object ScaleProbe {
   private def kernelsMode(spark: SparkSession, baseRows: Long,
       mults: Seq[Long]): Unit = {
     import org.apache.spark.sql.DataFrame
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // zipf-ish tokens via xxhash: token rank r drawn with p ~ 1/r over
     // a 100k-word domain (pow gives the skew; exact shape irrelevant —
     // only "few hot, long tail" matters for the MG certification)
@@ -314,9 +313,6 @@ object ScaleProbe {
       mults: Seq[Long], cores: Int): Unit = {
     import org.apache.spark.sql.Column
     import graft.functions.media._
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     val W = lit(128); val H = lit(96)
     val id = col("id")
     val variants: Seq[(String, Column, Column => Column)] = Seq(
@@ -386,9 +382,6 @@ object ScaleProbe {
   private def codecsMode(spark: SparkSession, baseBlobs: Long,
       mults: Seq[Long], cores: Int): Unit = {
     import org.apache.spark.sql.Column
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // ~4 KiB of repetitive-but-not-constant text per blob (the web-page
     // regime: entropy coding AND match finding both have work to do)
     val raw: Column = expr(
@@ -453,30 +446,26 @@ object ScaleProbe {
   /** The default mode: the order/route/codec/text operator paths at
     * `rows` generated orders. */
   private def ordersMode(spark: SparkSession, rows: Long, cpus: Int): Unit = {
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[scale-probe] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+    def report(name: String)(f: => Unit): Unit =
+      println(f"[scale-probe] $name%-28s ${timed(f)}%8.2f s")
 
     val gen = OrderGen.orders(spark, rows, "probe")
       .withColumnRenamed("order_id", "orderId")
 
-    timed(s"route+counts ($rows rows)") {
+    report(s"route+counts ($rows rows)") {
       Router.statusCounts(Router.route(gen)).collect()
     }
-    timed("exact cents aggregate") {
+    report("exact cents aggregate") {
       Router.route(gen).filter(col("status") === Router.Success)
         .agg(sum(Analytics.cents(col("price")))).collect()
     }
-    timed("two-pass prefix sum") {
+    report("two-pass prefix sum") {
       ScalablePrefix.runningSum(spark,
         gen.select(col("seq").as("k"), Analytics.cents(col("price")).as("v")),
         "k", "v", numPartitions = cpus * 4)
         .agg(max(col("run_sum"))).collect()
     }
-    timed("raw-datum encode+decode (500k)") {
+    report("raw-datum encode+decode (500k)") {
       import graft.avro.functions.{from_avro_datum, to_avro_datum}
       OrderGen.orders(spark, rows / 10, "probe-datum")
         .select(from_avro_datum(to_avro_datum(struct(
@@ -495,22 +484,22 @@ object ScaleProbe {
         i => element_at(vocab, (pmod(xxhash64(col("id"), i), lit(16)) + 1).cast("int"))),
         " ").as("text"))
 
-    timed(s"simhash32 kernel ($docCount docs)") {
+    report(s"simhash32 kernel ($docCount docs)") {
       graft.llm.Dedup.simhash32(docs, "doc_id", "text")
         .agg(count(lit(1))).collect()
     }
-    timed(s"chunk_document UDTF ($docCount docs)") {
+    report(s"chunk_document UDTF ($docCount docs)") {
       docs.select(col("doc_id"),
           graft.functions.chunking.chunk_document(
             graft.llm.TextOps.tokens(col("text")), 64, 16)
             .as(Seq("chunk_idx", "chunk", "n_toks")))
         .agg(count(lit(1))).collect()
     }
-    timed(s"repetition fractions ($docCount docs)") {
+    report(s"repetition fractions ($docCount docs)") {
       graft.llm.TextOps.withRepetition(docs, "text", 3)
         .agg(sum(col("uniq_3grams"))).collect()
     }
-    timed(s"composed curation pipeline ($docCount docs)") {
+    report(s"composed curation pipeline ($docCount docs)") {
       val scored = graft.llm.TextOps.withQualityScore(docs, "text")
       // the generated vocab has no stopwords, so scores are low by
       // construction; 0.1 keeps most docs — the probe measures the
@@ -519,7 +508,7 @@ object ScaleProbe {
       val deduped = graft.llm.Dedup.exactDedup(gated, "doc_id", "text")
       deduped.agg(count(lit(1)), sum(col("dup_count"))).collect()
     }
-    timed(s"zorder2 kernel + range layout ($rows rows)") {
+    report(s"zorder2 kernel + range layout ($rows rows)") {
       // the layout pass a 100 TB table would run: compute z-values and
       // range-partition by them (sampling + exchange), leaving every
       // partition with tight min/max on BOTH dimensions
@@ -529,7 +518,7 @@ object ScaleProbe {
         .repartitionByRange(cpus * 4, col("z"))
         .agg(count(lit(1))).collect()
     }
-    timed(s"interval bucket-join ($rows intervals)") {
+    report(s"interval bucket-join ($rows intervals)") {
       val iv = spark.range(rows).select(col("id"),
         (col("id") % 99991).as("s"), (col("id") % 99991 + col("id") % 13).as("e"))
       val win = spark.range(1000).select(col("id").as("w"),
@@ -543,7 +532,7 @@ object ScaleProbe {
         .filter(col("bucket") === expr(s"greatest(s, ps) div $B"))
         .agg(count(lit(1))).collect()
     }
-    timed(s"two-pass grouped rank ($rows rows, 5 groups)") {
+    report(s"two-pass grouped rank ($rows rows, 5 groups)") {
       // the low-cardinality-window killer: 5 groups over millions of
       // rows — the window form would funnel rows/5 through each task
       ScalablePrefix.groupedRank(spark,
@@ -552,7 +541,7 @@ object ScaleProbe {
         "g", "v", "k", numPartitions = cpus * 4)
         .agg(max(col("rnk"))).collect()
     }
-    timed(s"star-contraction CC (${rows / 10}-edge chain)") {
+    report(s"star-contraction CC (${rows / 10}-edge chain)") {
       // worst-case diameter: one chain component spanning every edge;
       // min-label propagation would need rows/10 rounds
       val chain = spark.range(rows / 10)
@@ -561,7 +550,7 @@ object ScaleProbe {
       val n = labels.filter(col("label") === 0L).count()
       println(f"[scale-probe]   chain rounds=$ccRounds labeled=$n")
     }
-    timed(s"bloom build+probe ($rows rows, 10k keys)") {
+    report(s"bloom build+probe ($rows rows, 10k keys)") {
       val keys = spark.range(10000).select((col("id") * 13).as("k"))
       val bloom = graft.ops.BloomPrune.buildWords(keys, "k",
         numBits = 1 << 17, numHashes = 3)
@@ -569,7 +558,7 @@ object ScaleProbe {
         .filter(graft.ops.BloomPrune.mightContain(bloom, col("k")))
         .agg(count(lit(1))).collect()
     }
-    timed(s"media header synth+parse ($docCount rows)") {
+    report(s"media header synth+parse ($docCount rows)") {
       docs.select(graft.functions.media.image_dims(
           graft.llm.Multimodal.synthesizeHeader(
             when(col("doc_id") % 3 === 0, "png")

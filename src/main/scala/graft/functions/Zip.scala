@@ -114,6 +114,10 @@ object Zip {
         if (en.csize != en.usize) return None
         java.util.Arrays.copyOfRange(b, di, di + en.csize.toInt)
       case 8 => // deflate
+        // a 258-byte match costs at least 2 bits, so a deflate stream
+        // yields at most 1032 bytes per compressed byte: a larger usize
+        // is a lie, refused before its buffer is allocated
+        if (en.usize > 1032L * en.csize) return None
         val inf = new java.util.zip.Inflater(true)
         try {
           inf.setInput(b, di, en.csize.toInt)

@@ -27,8 +27,12 @@ import graft.ops.Router
   *    idempotence available in foreachBatch.
   *  - Retry-by-replay (R1, offset non-commit) is re-modeled as a retry
   *    ledger: transient rows land in `retry/` with an attempt counter;
-  *    re-injection promotes attempts past maxRetries to the DLQ (F2) —
-  *    no blocking sleeps, no single-threaded redelivery loop.
+  *    the retry loop ([[startRetryLoop]]) watches its own `loopDir/retry`
+  *    queue and writes each batch's DLQ exits (attempts past maxRetries,
+  *    F2) and re-injections in one job, like the fan-out — no blocking
+  *    sleeps, no single-threaded redelivery loop. `loopDir` is not the
+  *    fan-out's `outDir`, and the loop never writes the seed batch id
+  *    `-1`.
   *  - The running aggregate (A1) runs as an update-mode streaming
   *    aggregation ([[runningAggregate]]): Spark's incremental partial +
   *    final HashAggregate IS the reference's `count/total/mean` state,
@@ -749,80 +753,59 @@ object OrderPipeline {
       org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.BinaryType),
       org.apache.spark.sql.types.StructField("attempts", org.apache.spark.sql.types.IntegerType)))
 
-  /** Inject retry records into a WATCHED retry directory: write to a
-    * hidden staging subdir (file sources ignore dot-prefixed paths),
-    * then move the part files to deterministic `tag`-derived names in
-    * the watch root. Deterministic names make a replayed injection
-    * overwrite itself instead of duplicating — the same idempotence
-    * contract as [[writeFanOut]]. Returns the number of files moved. */
-  def injectRetries(records: DataFrame, retryDir: String, tag: String): Int = {
-    val staging = s"$retryDir/.staging-$tag"
-    records.write.mode("overwrite").parquet(staging)
-    val conf = records.sparkSession.sessionState.newHadoopConf()
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(conf)
-    val parts = fs.listStatus(stagingPath)
-      .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    // a replay may produce FEWER part files than the failed attempt
-    // (parallelism change after restart); stale higher-indexed files
-    // from the earlier attempt would survive index-wise overwrites and
-    // duplicate records — clear every file of this tag first
-    val stale = fs.globStatus(new org.apache.hadoop.fs.Path(s"$retryDir/$tag-*"))
-    if (stale != null) stale.foreach(st => fs.delete(st.getPath, false))
-    var moved = 0
-    parts.zipWithIndex.foreach { case (src, i) =>
-      val dst = new org.apache.hadoop.fs.Path(s"$retryDir/$tag-$i.parquet")
-      fs.rename(src, dst)
-      moved += 1
+  /** One micro-batch of the re-injection loop: promote, then write the
+    * exhausted records and the survivors as the two sinks of one job
+    * ([[org.apache.spark.sql.graftbridge.MultiSinkParquet]]):
+    *  - `loopDir/dlq/batch=<id>`: exhausted records with the reference's
+    *    exhaustion message (consumer.py:312). They carry the ORIGINAL
+    *    key/value bytes from the retry ledger, so the DLQ payload
+    *    contract holds on this path too;
+    *  - `loopDir/retry/batch=<id>`: survivors (attempts+1), back in the
+    *    watched queue for the next trip (pacing = one trip per
+    *    micro-batch; see [[promoteRetries]]).
+    * Each sink's batch directory is replaced, so a replayed batch id
+    * rewrites its files instead of adding copies, as in [[writeFanOut]].
+    * An empty batch writes nothing: the job would leave a schema-only
+    * file in the watched queue, which the loop would read as new data,
+    * forever. `loopDir` must not be a fan-out `outDir`: the job stages
+    * in `loopDir/_temporary`, and two jobs must not share that root. */
+  def reinjectBatch(batch: DataFrame, batchId: Long, loopDir: String,
+      maxRetries: Int = Router.MaxRetries): Unit =
+    if (!batch.isEmpty) {
+      val record = retryRecordSchema.fieldNames.toSeq.map(col)
+      val disposition = col("disposition")
+      val sinks = promoteRetries(batch, maxRetries).select(
+        when(disposition === "dlq", struct(record :+ format_string(
+          "Processing failed after %d retries", lit(maxRetries)).as("error_reason"): _*)).as("dlq"),
+        when(disposition === "retry", struct(record: _*)).as("retry"))
+      MultiSinkParquet.write(sinks, loopDir, s"batch=$batchId")
     }
-    fs.delete(stagingPath, true)
-    moved
-  }
 
-  /** One micro-batch of the re-injection loop: promote, split, write.
-    * Exhausted records land in `dlqDir/retry_batch=<id>` (overwrite —
-    * replay-idempotent) carrying the reference's exhaustion message
-    * (consumer.py:312); survivors go back into `retryDir` for the next
-    * trip (pacing = one trip per micro-batch; see [[promoteRetries]]).
-    * The exhausted records carry the ORIGINAL key/value bytes from the
-    * retry ledger, so the DLQ payload contract holds on this path too.
-    * NB: this population is partitioned `retry_batch=` (vs the main
-    * DLQ's `batch=`) deliberately — the two record shapes differ, and
-    * distinct partition-column names keep a naive union read from
-    * conflating them. */
-  def reinjectBatch(batch: DataFrame, batchId: Long, retryDir: String,
-      dlqDir: String, maxRetries: Int = Router.MaxRetries): Unit = {
-    val promoted = promoteRetries(batch, maxRetries).persist()
-    try {
-      promoted.filter(col("disposition") === "dlq")
-        .withColumn("error_reason",
-          format_string("Processing failed after %d retries", lit(maxRetries)))
-        .drop("disposition")
-        .write.mode("overwrite").parquet(s"$dlqDir/retry_batch=$batchId")
-      val still = promoted.filter(col("disposition") === "retry")
-        .drop("disposition")
-      // an empty write would still create a part file, which the source
-      // would see as new data -> livelock; only inject real survivors
-      if (!still.isEmpty) { injectRetries(still, retryDir, s"reinject-$batchId"); () }
-    } finally { promoted.unpersist(); () }
-  }
-
-  /** Start the self-feeding retry loop over a retry directory. Each
-    * record entering with attempts=1 makes maxRetries promotions across
-    * successive micro-batches, then exits to the DLQ; the stream goes
-    * idle when the queue drains (`processAllAvailable` returns).
+  /** Start the self-feeding retry loop over `loopDir`, which it owns.
+    * It watches `loopDir/retry` (created if absent), laid out and typed
+    * like [[writeFanOut]]'s `retry` sink, and writes [[reinjectBatch]]'s
+    * two sinks under `loopDir`. Seed the queue with a plain parquet
+    * write to `loopDir/retry/batch=-1`, a batch id the loop never
+    * writes. Each record entering with attempts=1 makes maxRetries
+    * promotions across successive micro-batches, then exits to
+    * `loopDir/dlq`; the stream goes idle when the queue drains
+    * (`processAllAvailable` returns). The source lists the queue
+    * recursively, so it infers no `batch` partition column, which the
+    * schema the stream started with would not have.
     * Pass `Trigger.AvailableNow()` to process only the backlog visible
     * at start and then terminate — restarting from the same checkpoint
     * resumes with the re-injections the previous run produced (the
     * restart-resilience contract, tested in StreamingSpec). */
-  def startRetryLoop(spark: SparkSession, retryDir: String, dlqDir: String,
-      checkpointDir: String, maxRetries: Int = Router.MaxRetries,
-      trigger: Option[Trigger] = None): StreamingQuery = {
-    val writer = spark.readStream.schema(retryRecordSchema).parquet(retryDir)
+  def startRetryLoop(spark: SparkSession, loopDir: String, checkpointDir: String,
+      maxRetries: Int = Router.MaxRetries, trigger: Option[Trigger] = None): StreamingQuery = {
+    val queue = new org.apache.hadoop.fs.Path(loopDir, "retry")
+    queue.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(queue)
+    val writer = spark.readStream.schema(retryRecordSchema)
+      .option("recursiveFileLookup", "true").parquet(queue.toString)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reinjectBatch(batch, batchId, retryDir, dlqDir, maxRetries)
+        reinjectBatch(batch, batchId, loopDir, maxRetries)
       }
     trigger.fold(writer)(writer.trigger).start()
   }

@@ -206,6 +206,16 @@ class DecoderTotalitySpec extends AnyFunSuite {
     assert(allocated < (1L << 20), s"one call allocated ${allocated >> 10} KiB")
   }
 
+  test("zip_entries: a forged 16 MiB deflate usize is refused before its buffer is allocated") {
+    val forged = Zip.synth(5L, 3, corruptFirst = false)
+    val cd = forged.indices.find(i => forged.slice(i, i + 4).sameElements(Array[Byte](0x50, 0x4b, 1, 2))).get
+    java.nio.ByteBuffer.wrap(forged).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(cd + 24, 16 << 20)
+    def entries() = ZipEntries(Literal(forged, BinaryType)).eval().iterator.map(_.getBoolean(5)).toList
+    assert(entries() === List(false, true, true))
+    val allocated = Mutations.allocatedBy(entries())
+    assert(allocated < (1L << 20), s"one call allocated ${allocated >> 10} KiB")
+  }
+
   test("tiff_stats: u32 sides whose product wraps negative decode to null") {
     // 110 bytes, little-endian, 8 entries: ImageWidth 0xFFFFFFFF,
     // ImageLength 0x80000001, 8-bit grey, uncompressed, one strip

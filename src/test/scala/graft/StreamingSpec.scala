@@ -78,7 +78,6 @@ class StreamingSpec extends SparkSpec {
     val out = tmpDir("graft-retryloop-out")
     val ckptMain = tmpDir("graft-retryloop-ckpt1")
     val loopDir = tmpDir("graft-retryloop-queue")
-    val dlqDir = tmpDir("graft-retryloop-dlq")
     val ckptLoop = tmpDir("graft-retryloop-ckpt2")
 
     // stage 1: the fan-out pipeline lands transient orders in retry/
@@ -90,22 +89,21 @@ class StreamingSpec extends SparkSpec {
     val fromFanOut = spark.read.parquet(s"$out/retry").drop("batch")
     assert(fromFanOut.count() === 2)
 
-    // stage 2: seed the watched queue dir, run the loop until it drains
-    OrderPipeline.injectRetries(fromFanOut, loopDir, "seed")
-    val loop = OrderPipeline.startRetryLoop(spark, loopDir, dlqDir, ckptLoop)
+    // stage 2: start the loop on an empty queue, then seed it: the
+    // queue's first batch directory must not change the source's schema
+    val loop = OrderPipeline.startRetryLoop(spark, loopDir, ckptLoop)
+    loop.processAllAvailable()
+    fromFanOut.write.parquet(s"$loopDir/retry/batch=-1")
     loop.processAllAvailable(); loop.stop()
 
     // each record made attempts 1 -> 2 -> 3 -> 4 across successive
     // micro-batches: at least two distinct re-injection passes happened
-    val fs = new org.apache.hadoop.fs.Path(loopDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val reinjectBatches = fs.listStatus(new org.apache.hadoop.fs.Path(loopDir))
-      .map(_.getPath.getName).filter(_.startsWith("reinject-"))
-      .map(_.stripPrefix("reinject-").takeWhile(_ != '-')).distinct
-    assert(reinjectBatches.length >= 2, s"expected >=2 re-injection passes, saw $reinjectBatches")
+    val reinjectBatches = new java.io.File(s"$loopDir/retry").list()
+      .filter(d => d.startsWith("batch=") && d != "batch=-1")
+    assert(reinjectBatches.length >= 2, s"expected >=2 re-injection passes, saw ${reinjectBatches.toSeq}")
 
     // exhausted records exited to the DLQ with the reference's message
-    val rows = spark.read.parquet(dlqDir)
+    val rows = spark.read.parquet(s"$loopDir/dlq")
       .select($"orderId", $"attempts", $"error_reason").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(_._1)
     assert(rows.map(_._1).toSeq === Seq("t1", "t2"))
@@ -113,8 +111,8 @@ class StreamingSpec extends SparkSpec {
     assert(rows.forall(_._3 === "Processing failed after 3 retries"))
     // the queue dir retains processed files (the checkpoint is the
     // progress marker); the LAST re-injection pass carries attempts=3
-    val maxQueued = spark.read.schema(OrderPipeline.retryRecordSchema)
-      .parquet(loopDir).agg(max($"attempts")).head().getInt(0)
+    val maxQueued = spark.read.parquet(s"$loopDir/retry")
+      .agg(max($"attempts")).head().getInt(0)
     assert(maxQueued === Router.MaxRetries)
   }
 
@@ -148,27 +146,26 @@ class StreamingSpec extends SparkSpec {
   test("retry loop resumes from its checkpoint across restarts, no DLQ duplicates") {
     import org.apache.spark.sql.streaming.Trigger
     val loopDir = tmpDir("graft-retryrestart-queue")
-    val dlqDir = tmpDir("graft-retryrestart-dlq")
     val ckpt = tmpDir("graft-retryrestart-ckpt")
     val seed = Seq(("orders", 0, 1L, "t1", "P", 30.0, 1))
       .toDF("topic", "partition", "offset", "orderId", "product", "price", "attempts")
-    OrderPipeline.injectRetries(seed, loopDir, "seed")
+    seed.write.parquet(s"$loopDir/retry/batch=-1")
     // AvailableNow latches the end offset at start, so each RUN
     // processes only the previous generation's files and terminates;
     // every restart is a fresh process resuming from the checkpoint
     var runs = 0
     var drained = false
     while (!drained && runs < 8) {
-      val q = OrderPipeline.startRetryLoop(spark, loopDir, dlqDir, ckpt,
+      val q = OrderPipeline.startRetryLoop(spark, loopDir, ckpt,
         trigger = Some(Trigger.AvailableNow()))
       assert(q.awaitTermination(120000), "run did not terminate")
       runs += 1
-      drained = spark.read.parquet(dlqDir).count() > 0
+      drained = spark.read.parquet(s"$loopDir/dlq").count() > 0
     }
     assert(drained, s"loop never drained after $runs restarts")
     // attempts 1 -> 2 -> 3 -> 4(DLQ): at least three distinct runs
     assert(runs >= 3, s"expected >=3 generations, got $runs")
-    val dlq = spark.read.parquet(dlqDir)
+    val dlq = spark.read.parquet(s"$loopDir/dlq")
       .select($"orderId", $"attempts", $"error_reason").collect()
     assert(dlq.length === 1, s"duplicated DLQ records: ${dlq.mkString(", ")}")
     assert(dlq.head.getInt(1) === 4)
@@ -177,17 +174,50 @@ class StreamingSpec extends SparkSpec {
 
   test("reinjectBatch is replay-idempotent (same batch id twice)") {
     val loopDir = tmpDir("graft-reinject-idem-queue")
-    val dlqDir = tmpDir("graft-reinject-idem-dlq")
+    val key = "k".getBytes("UTF-8")
+    val value = Array[Byte](1, 2, 3)
     val seed = Seq(
-      ("orders", 0, 1L, "t-dlq", "P", 30.0, 3),   // promotes to 4 -> DLQ
-      ("orders", 0, 2L, "t-again", "P", 30.0, 1)) // promotes to 2 -> re-inject
-      .toDF("topic", "partition", "offset", "orderId", "product", "price", "attempts")
-    OrderPipeline.reinjectBatch(seed, 0, loopDir, dlqDir)
-    OrderPipeline.reinjectBatch(seed, 0, loopDir, dlqDir)
-    assert(spark.read.parquet(dlqDir).count() === 1)
-    val queued = spark.read.schema(OrderPipeline.retryRecordSchema).parquet(loopDir)
+      ("orders", 0, 1L, "t-dlq", "P", 30.0, key, value, 3),   // promotes to 4 -> DLQ
+      ("orders", 0, 2L, "t-again", "P", 30.0, key, value, 1)) // promotes to 2 -> re-inject
+      .toDF(OrderPipeline.retryRecordSchema.fieldNames.toSeq: _*)
+    OrderPipeline.reinjectBatch(seed, 0, loopDir)
+    OrderPipeline.reinjectBatch(seed, 0, loopDir)
+    assert(spark.read.parquet(s"$loopDir/dlq").count() === 1)
+    val queued = spark.read.parquet(s"$loopDir/retry")
     assert(queued.count() === 1)
     assert(queued.select($"attempts").as[Int].head() === 2)
+
+    // an empty batch writes nothing: a schema-only file in the watched
+    // queue would be new data to the loop, forever
+    val emptyDir = tmpDir("graft-reinject-idem-empty")
+    OrderPipeline.reinjectBatch(seed.limit(0), 1, emptyDir)
+    assert(new java.io.File(emptyDir).list().isEmpty)
+
+    // a job that dies part-way, then replays with the same batch id,
+    // leaves exactly one copy per sink and no staging files
+    val failOnce = udf { (offset: Long) =>
+      if (offset == 150L && FanOutFault.armed.getAndSet(false))
+        throw new IllegalStateException("injected re-injection fault")
+      offset
+    }
+    val many = (0 until 200).map(i => ("orders", 0, i.toLong, s"t$i", "P", 30.0, key, value, 1 + i % 3))
+      .toDF(OrderPipeline.retryRecordSchema.fieldNames.toSeq: _*)
+      .repartition(3).withColumn("offset", failOnce(col("offset")))
+    val failDir = tmpDir("graft-reinject-idem-fail")
+    FanOutFault.armed.set(false)
+    OrderPipeline.reinjectBatch(many, 2, failDir)
+    FanOutFault.armed.set(true)
+    val err = intercept[Exception](OrderPipeline.reinjectBatch(many, 2, failDir))
+    assert(!FanOutFault.armed.get(), s"the fault never fired: $err")
+    Seq("dlq", "retry").foreach(sink => assert(!new java.io.File(s"$failDir/$sink/batch=2").exists(), sink))
+    OrderPipeline.reinjectBatch(many, 2, failDir)
+    // attempts 3 promote to 4 (DLQ); attempts 1 and 2 re-inject
+    for ((sink, n) <- Seq("dlq" -> 66L, "retry" -> 134L)) {
+      val rows = spark.read.parquet(s"$failDir/$sink/batch=2")
+      assert(rows.count() === n, sink)
+      assert(rows.select($"offset").distinct().count() === n, s"$sink has duplicates")
+    }
+    assert(!filesUnder(failDir).exists(_.contains("_temporary")))
   }
 
   test("checkpoint restart resumes from committed offsets only") {
