@@ -371,11 +371,11 @@ object ScaleProbe {
   }
 
   /** `--codecs [blobs] [mults]`: measured BYTE-CODEC throughput for
-    * the compression family (gzip/DEFLATE, snappy, the round-11 full
-    * zstd in both sequence-table modes, brotli store) — the codecs a
-    * 100 TB ingest spends real CPU in. Per codec, three passes over
-    * ~4 KiB word-salad blobs distributed across all cores: synth-only,
-    * synth+compress, synth+compress+decompress; differences isolate
+    * the compression family (gzip/DEFLATE, snappy, zstd level 3,
+    * brotli store) — the codecs a 100 TB ingest spends real CPU in.
+    * Per codec, three passes over ~4 KiB word-salad blobs distributed
+    * across all cores: synth-only, synth+compress,
+    * synth+compress+decompress; differences isolate
     * compress and decompress cost, reported as MB/s of RAW bytes
     * (total and per core) plus the achieved ratio. 1×/10× blob counts
     * pin linear scaling (per-row kernels, no shuffle). */
@@ -396,8 +396,7 @@ object ScaleProbe {
     val variants: Seq[(String, Column => Column, Column => Column)] = Seq(
       ("gzip_deflate", b => gzip_compress(b), b => gzip_decompress(b)),
       ("snappy_block", b => snappy_compress(b), b => snappy_decompress(b)),
-      ("zstd_predefined", b => zstd_compress(b), b => zstd_decompress(b)),
-      ("zstd_explicit_fse", b => zstd_compress(b, lit(true)), b => zstd_decompress(b)),
+      ("zstd", b => zstd_compress(b), b => zstd_decompress(b)),
       ("brotli_store", b => brotli_wrap(b), b => brotli_unwrap(b)))
     println(s"[codecs] base=$baseBlobs blobs of ~4 KiB; cores=$cores; " +
       s"multipliers=${mults.mkString(",")}")

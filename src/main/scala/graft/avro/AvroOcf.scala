@@ -577,7 +577,7 @@ object AvroOcf {
       // the block header declares the LZMA2 dictionary (up to 1.5 GiB),
       // allocated before any output: refuse one past the block cap
       case "xz" => new org.tukaani.xz.SingleXZInputStream(in, (Limits.AvroBlockOut >> 10) + 1024)
-      case "zstandard" => new com.github.luben.zstd.ZstdInputStreamNoFinalizer(in)
+      case "zstandard" => graft.functions.ZstdCodec.inputStream(in)
       case "snappy" =>
         // raw snappy, then the big-endian CRC32 of the inflated bytes
         if (len < 4) throw new IllegalArgumentException("truncated snappy block")
@@ -591,17 +591,9 @@ object AvroOcf {
         return out
       case other => throw new IllegalArgumentException(s"unsupported avro codec $other")
     }
-    try {
-      val out = new ByteArrayOutputStream(math.min(4L * len + 64, Limits.AvroBlockOut).toInt)
-      val buf = new Array[Byte](8192)
-      var n = stream.read(buf)
-      while (n >= 0) {
-        if (out.size > Limits.AvroBlockOut - n) throw new IllegalArgumentException("avro block too large")
-        out.write(buf, 0, n)
-        n = stream.read(buf)
-      }
-      out.toByteArray
-    } finally {
+    try Limits.readAtMost(stream, Limits.AvroBlockOut)
+      .getOrElse(throw new IllegalArgumentException("avro block too large"))
+    finally {
       stream.close()
       if (inflater != null) inflater.end()
     }

@@ -190,7 +190,7 @@ object Brotli {
     * `corrupt` truncates to 4 bytes: the walk dies inside the first
     * blocks, deterministically 'malformed'. */
   def synthStructural(id: Long, corrupt: Boolean): Array[Byte] = {
-    val bw = new ZstdCodec.BitWriter
+    val bw = new BitWriter
     val wb = Array(16, 18, 22, 10, 24)((id % 5).toInt)
     wb match {
       case 16 => bw.add(0L, 1)
@@ -247,7 +247,7 @@ object Brotli {
     * ISLAST+ISLASTEMPTY. Interoperable: any RFC 7932 decoder inflates
     * it. */
   def wrap(data: Array[Byte]): Array[Byte] = {
-    val bw = new ZstdCodec.BitWriter
+    val bw = new BitWriter
     bw.add(0L, 1) // WBITS = 16
     var p = 0
     while (p < data.length) {

@@ -764,20 +764,8 @@ case class GzipDecompress(child: Expression)
   override def nullSafeEval(input: Any): Any = {
     val b = input.asInstanceOf[Array[Byte]]
     try {
-      val gz = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b))
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var total = 0
-      var n = gz.read(buf)
-      while (n >= 0) {
-        total += n
-        if (total > Limits.GzipOut) return null // bomb guard: malformed, routed
-        bos.write(buf, 0, n)
-        n = gz.read(buf)
-      }
-      gz.close()
-      bos.toByteArray
+      val gz = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
+      try Limits.readAtMost(gz, Limits.GzipOut).orNull finally gz.close()
     } catch { case _: java.io.IOException => null }
   }
   override protected def withNewChildInternal(newChild: Expression): GzipDecompress =

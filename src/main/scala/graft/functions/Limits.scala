@@ -54,6 +54,21 @@ object Limits {
     * arrays and maps each count one level). */
   final val AvroDepth = 256
 
+  /** The bytes `in` yields, or None once they pass `cap`: a stream
+    * that inflates past its cap is read at most one chunk beyond it.
+    * The caller closes `in`. */
+  def readAtMost(in: java.io.InputStream, cap: Int): Option[Array[Byte]] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](8192)
+    var n = in.read(buf)
+    while (n >= 0) {
+      if (out.size > cap - n) return None
+      out.write(buf, 0, n)
+      n = in.read(buf)
+    }
+    Some(out.toByteArray)
+  }
+
   /** Whether a `w` x `h` image is admitted under `cap` pixels. Each
     * side is bounded before the multiply, so two u32 sides cannot wrap
     * the product past the cap. */

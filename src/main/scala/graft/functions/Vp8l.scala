@@ -658,7 +658,7 @@ object Vp8l {
     codes
   }
 
-  private type BW = ZstdCodec.BitWriter
+  private type BW = BitWriter
 
   @inline private def writeCode(bw: BW, code: Int, len: Int): Unit = {
     var i = len - 1
@@ -848,7 +848,7 @@ object Vp8l {
       o: EncOpts = EncOpts()): Array[Byte] = {
     require(w >= 1 && w <= 16384 && h >= 1 && h <= 16384 &&
       argb.length == w * h, s"bad dims ${w}x$h for ${argb.length} px")
-    val bw = new ZstdCodec.BitWriter
+    val bw = new BitWriter
     var px = argb.clone()
     var curW = w
     // ---- transforms, forward application order == stream order
@@ -951,7 +951,7 @@ object Vp8l {
     // ---- level-0 image: cache decl + NO meta prefix + codes + pixels
     // (writePixels emits the cache bit; the meta bit comes right after
     // it per the stream grammar, so splice it here)
-    val bw2 = new ZstdCodec.BitWriter
+    val bw2 = new BitWriter
     writePixels(bw2, px, o.cacheBits, o.lz77)
     // replay bw2 into bw with the meta-prefix 0 bit inserted after the
     // cache declaration — simplest: re-emit cache decl here instead

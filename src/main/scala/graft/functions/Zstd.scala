@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * zstd frames and read their envelope: content size (for planning),
   * window size (for memory admission), dictionary id (for dict
   * routing), checksum presence. Triage reads ONLY the header — the
-  * cheap dispatch step; full entropy decode (FSE/Huffman, §5
-  * dictionaries, seekable shards) is [[ZstdCodec]] / [[ZstdSeekable]]
-  * (round 11) — route here, decode there.
+  * cheap dispatch step; full decode (§5 dictionaries, seekable shards)
+  * is [[ZstdCodec]] (libzstd through zstd-jni) / [[ZstdSeekable]] —
+  * route here, decode there.
   *
   * Parsed: magic 0xFD2FB528; Frame_Header_Descriptor (content-size
   * flag, single-segment, checksum, dictionary-id flag; RESERVED BIT

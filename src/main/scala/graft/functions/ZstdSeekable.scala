@@ -34,9 +34,13 @@ object ZstdSeekable {
   private final val SeekMagic = 0x8f92eab1L
   private final val SkipMagicSeek = 0x184d2a5eL
 
+  /** xxHash64 (seed 0); its low 32 bits are the seek table's
+    * per-member checksum. */
+  private[graft] def xxh64(b: Array[Byte]): Long =
+    net.jpountz.xxhash.XXHashFactory.safeInstance().hash64().hash(b, 0, b.length, 0L)
+
   /** Pack chunks as a seekable shard: one independent frame per chunk
-    * (predefined sequence tables) + the seek table with per-member
-    * checksums. */
+    * + the seek table with per-member checksums. */
   def pack(chunks: Array[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(256)
     def w32(v: Long): Unit = {
@@ -58,7 +62,7 @@ object ZstdSeekable {
     while (i < chunks.length) {
       w32(cSizes(i))
       w32(chunks(i).length)
-      w32(ZstdCodec.xxh64(chunks(i), 0, chunks(i).length) & 0xffffffffL)
+      w32(xxh64(chunks(i)) & 0xffffffffL)
       i += 1
     }
     w32(chunks.length)
@@ -118,8 +122,7 @@ object ZstdSeekable {
           m.cOffset.toInt, (m.cOffset + m.cSize).toInt)
         ZstdCodec.decompress(frame).filter { out =>
           out.length == m.dSize &&
-            m.checksum.forall(c =>
-              (ZstdCodec.xxh64(out, 0, out.length) & 0xffffffffL) == c)
+            m.checksum.forall(_ == (xxh64(out) & 0xffffffffL))
         }
       }
     }

@@ -145,7 +145,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // round-11 additions: full zstd codec, brotli structural layer,
     // MP4 triage, hinted dispatch
     unary("zstd_decompress", classOf[ZstdDecompress], ZstdDecompress)
-    binary("zstd_compress", classOf[ZstdCompress], ZstdCompress)
+    unary("zstd_compress", classOf[ZstdCompress], ZstdCompress)
     binary("zstd_compress_dict", classOf[ZstdCompressDict], ZstdCompressDict)
     binary("zstd_decompress_dict", classOf[ZstdDecompressDict], ZstdDecompressDict)
     unary("zstd_seek_pack", classOf[ZstdSeekPack], ZstdSeekPack)

@@ -2113,9 +2113,8 @@ private[graft] trait LlmQueries2 { this: SparkEntry.type =>
 
   /** WARC-over-zstd — the NORTH-STAR ingest path (Common-Crawl-style
     * shards ship as zstd members): a skippable frame then the WARC
-    * file as one zstd frame (alternating Predefined / explicit-table
-    * sequence coding by id), decoded by the round-11 full zstd codec,
-    * THEN the WARC record walk and strip_html chain of q_warc_ingest.
+    * file as one zstd frame, decoded by zstd_decompress, THEN the
+    * WARC record walk and strip_html chain of q_warc_ingest.
     * Corruption stays at the WARC layer (the zstd layer must pass it
     * through intact), so the gate proves the COMPOSITION: codec
     * round-trip ∘ container walk ∘ text pipeline, one query. */
@@ -2129,8 +2128,7 @@ private[graft] trait LlmQueries2 { this: SparkEntry.type =>
         (lit(3) + col("doc_id") % 4).cast("int").as("n"),
         expr("(doc_id div 25) % 4 = 3").as("corrupt"))
     val shard = concat(lit(skippable),
-      zstd_compress(synth_warc(col("doc_id"), col("n"), col("corrupt")),
-        col("doc_id") % 2 === 0))
+      zstd_compress(synth_warc(col("doc_id"), col("n"), col("corrupt"))))
     d.select(col("doc_id"),
         warc_records(zstd_decompress(shard))
           .as(Seq("rec_idx", "warc_type", "target_uri", "content_length",

@@ -339,28 +339,23 @@ private[graft] trait PipelineQueries { this: SparkEntry.type =>
       .orderBy(col("doc_id"))
   }
 
-  /** Zstandard FULL round trip (RFC 8878 — frames, Huffman literals,
-    * FSE sequence coding, xxhash64 checksum), closing the container
-    * family's one header-only gap: q_zstd_triage routes frames, this
-    * DECODES them. raw = text doubled (the whole-text self-match the
-    * sequence coder must capture), compressed by the codec we ship —
-    * alternating Predefined_Mode and explicit FSE_Compressed_Mode
-    * table descriptions so BOTH decoder table paths stay oracle-gated.
-    * Every fourth doc truncates mid-stream and must decode to null
-    * (PERMISSIVE — checksum/truncation gate). comp_smaller = TRUE is a
-    * PINNED claim, valid because the filter pins 256 <= len <= 65535:
-    * long enough that entropy-coded literals + one match beat the
-    * ~120-byte worst-case frame overhead, short enough that doubled
-    * text stays inside one 128 KiB block. */
+  /** Zstandard FULL round trip (RFC 8878 frames with the xxhash64
+    * checksum): q_zstd_triage routes frames, this DECODES them. raw =
+    * text doubled (the whole-text self-match the match finder must
+    * capture), compressed by zstd_compress. Every fourth doc truncates
+    * mid-stream and must decode to null (PERMISSIVE — checksum and
+    * truncation gate). comp_smaller = TRUE is a PINNED claim, valid
+    * because the filter pins 256 <= len <= 65535: long enough that
+    * entropy-coded literals + one match beat the frame overhead, short
+    * enough that doubled text stays inside one 128 KiB block. */
   private[graft] def qZstdDecode(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.zstdio._
     val d = t(s, dir, "documents").filter(col("doc_id") % 19 === 0)
       .filter(octet_length(col("text")).between(256, 65535))
       .select(col("doc_id"), col("text"),
-        expr("(doc_id div 19) % 2 = 0").as("explicit_tables"),
         expr("(doc_id div 19) % 4 = 3").as("corrupt"))
     val raw = concat(col("text").cast("binary"), col("text").cast("binary"))
-    val comp = zstd_compress(raw, col("explicit_tables"))
+    val comp = zstd_compress(raw)
     val blob = when(col("corrupt"),
         expr("substring(comp, 1, length(comp) - 3)"))
       .otherwise(col("comp"))
@@ -383,7 +378,7 @@ private[graft] trait PipelineQueries { this: SparkEntry.type =>
     * deterministic), so `dict_smaller` is a PINNED claim: the first
     * half becomes one dict match instead of entropy-coded literals.
     * Structured TRAINED dictionaries (entropy-table seeding, dict-id
-    * checks) are pinned against reference zstd in ZstdCodecSpec.
+    * checks) are pinned in ZstdCodecSpec.
     * Every third doc truncates and must decode to null. */
   private[graft] def qZstdDict(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.zstdio._
@@ -801,7 +796,7 @@ private[graft] trait PipelineQueries { this: SparkEntry.type =>
     val d = t(s, dir, "documents").filter(col("doc_id") % 23 === 0)
     val payload = concat(lit(skippable),
       zstd_compress(col("text").cast("binary")),
-      zstd_compress(reverse(col("text")).cast("binary"), lit(true)))
+      zstd_compress(reverse(col("text")).cast("binary")))
     d.select(col("doc_id"), zstd_decompress(payload).as("rt"))
       .select(col("doc_id"),
         length(col("rt")).cast("long").as("rt_len"),

@@ -597,6 +597,19 @@ class AvroCodecSpec extends SparkSpec {
     val xz = Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0) ++ flags ++ crc32(flags) ++
       blockHeader ++ crc32(blockHeader) ++ Array[Byte](1, 0, 0, 'x')
     nullWithoutAllocating(xzContainer, header ++ varint(1) ++ varint(xz.length) ++ xz ++ sync)
+    // the same for a zstandard block whose frame declares a 2^28 window,
+    // past Limits.ZstdWindow: one raw block holding the plain datum
+    val zstdContainer = container("x-1", "Packed", 3.5f, codec = org.apache.avro.file.CodecFactory.zstandardCodec(3))
+    val (zHeader, zSync) = headerOf(zstdContainer)
+    val plain = container("x-1", "Packed", 3.5f)
+    val datum = plain.slice(headerOf(plain)._1.length + 2, plain.length - 16)
+    def zstdBlock(windowLog: Int) = {
+      val frame = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0, ((windowLog - 10) << 3).toByte) ++
+        Array[Byte]((1 | datum.length << 3).toByte, (datum.length >> 5).toByte, 0) ++ datum
+      zHeader ++ varint(1) ++ varint(frame.length) ++ frame ++ zSync
+    }
+    assert(decoded(zstdBlock(27)) === Some(("x-1", "Packed", 3.5f)))
+    nullWithoutAllocating(zstdContainer, zstdBlock(28))
   }
 
   test("zero-byte array items are capped per datum, not per nested array") {

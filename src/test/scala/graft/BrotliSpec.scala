@@ -32,7 +32,7 @@ class BrotliSpec extends AnyFunSuite {
   test("WBITS variable-length codes parse") {
     // craft streams with just WBITS + ISLAST + ISLASTEMPTY
     def stream(bits: Seq[Int]): Array[Byte] = {
-      val bw = new graft.functions.ZstdCodec.BitWriter
+      val bw = new graft.functions.BitWriter
       bits.foreach(b => bw.add(b.toLong, 1))
       bw.add(1L, 1); bw.add(1L, 1) // ISLAST + ISLASTEMPTY
       bw.alignForward()
@@ -50,7 +50,7 @@ class BrotliSpec extends AnyFunSuite {
   }
 
   test("metadata blocks are skipped; compressed meta-blocks route to 'br'") {
-    val bw = new graft.functions.ZstdCodec.BitWriter
+    val bw = new graft.functions.BitWriter
     bw.add(0L, 1) // WBITS 16
     // metadata block: ISLAST=0, MNIBBLES=3 (0b11), reserved=0,
     // MSKIPBYTES=1, len byte = 4 (-> skip 5 bytes)
@@ -70,7 +70,7 @@ class BrotliSpec extends AnyFunSuite {
 
     // MSKIPBYTES=1 with length byte 0x00 is VALID (MSKIPLEN=1): the
     // nonzero-last-byte rule applies only when MSKIPBYTES > 1
-    val bw1 = new graft.functions.ZstdCodec.BitWriter
+    val bw1 = new graft.functions.BitWriter
     bw1.add(0L, 1) // WBITS 16
     bw1.add(0L, 1); bw1.add(3L, 2); bw1.add(0L, 1); bw1.add(1L, 2)
     bw1.add(0L, 8) // len byte 0x00 -> skip exactly 1 byte
@@ -83,7 +83,7 @@ class BrotliSpec extends AnyFunSuite {
     bw1.alignForward()
     assert(Brotli.unwrap(bw1.toArray).exists(_.sameElements("x".getBytes)))
     // a 2-byte length field whose last byte IS zero stays malformed
-    val bw1b = new graft.functions.ZstdCodec.BitWriter
+    val bw1b = new graft.functions.BitWriter
     bw1b.add(0L, 1)
     bw1b.add(0L, 1); bw1b.add(3L, 2); bw1b.add(0L, 1); bw1b.add(2L, 2)
     bw1b.add(4L, 16) // high byte zero -> reject
@@ -92,7 +92,7 @@ class BrotliSpec extends AnyFunSuite {
 
     // compressed meta-block: ISLAST=1, ISLASTEMPTY=0, MNIBBLES=0,
     // MLEN-1=9 -> header parses, entropy layer starts -> kind 'br'
-    val bw2 = new graft.functions.ZstdCodec.BitWriter
+    val bw2 = new graft.functions.BitWriter
     bw2.add(0L, 1); bw2.add(1L, 1); bw2.add(0L, 1); bw2.add(0L, 2)
     bw2.add(9L, 16)
     bw2.add(0x5aL, 8); bw2.add(0xa5L, 8) // opaque entropy bits
@@ -151,7 +151,7 @@ class BrotliSpec extends AnyFunSuite {
     val notBr = Array.fill(8)(0x91.toByte)
     assert(BlobKind.kindHinted(notBr, "br") == "binary")
     // magic families win over content: zstd + mp4 routing
-    val z = graft.functions.ZstdCodec.compress("zzz".getBytes, false)
+    val z = graft.functions.ZstdCodec.compress("zzz".getBytes)
     assert(BlobKind.kind(z) == "zstd")
     assert(BlobKind.kind(graft.functions.Mp4.synth(5, corrupt = false)) == "mp4")
   }

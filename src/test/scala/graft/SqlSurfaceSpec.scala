@@ -53,7 +53,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // round-11 kernels: full zstd codec, brotli store layer, mp4
     // triage, hinted dispatch
     assert(one[Array[Byte]](
-      "SELECT zstd_decompress(zstd_compress(cast('frame frame frame' as binary), true))")
+      "SELECT zstd_decompress(zstd_compress(cast('frame frame frame' as binary)))")
       .sameElements("frame frame frame".getBytes))
     assert(one[Array[Byte]](
       "SELECT brotli_unwrap(brotli_wrap(cast('stored bytes' as binary)))")

@@ -151,7 +151,7 @@ class Vp8lSpec extends AnyFunSuite {
     // single-symbol {0}: prefix value 1 -> plane code 1 -> DistMap[0]
     // = (0,1) -> dist = xsize: row 2 copies row 1 through the 2D map
     // (our encoder only ever emits codes > 120).
-    val bw = new graft.functions.ZstdCodec.BitWriter
+    val bw = new graft.functions.BitWriter
     def bits(s: String): Unit = s.foreach(c => bw.add(if (c == '1') 1L else 0L, 1))
     def simpleSingle(sym: Int): Unit = {
       bw.add(1L, 1); bw.add(0L, 1) // simple, one symbol
@@ -209,7 +209,7 @@ class Vp8lSpec extends AnyFunSuite {
     // tile 1 -> group 1. All main trees are single-symbol (zero bits
     // per pixel), so the pixel values come ENTIRELY from which group
     // the tile lookup selects.
-    val bw = new graft.functions.ZstdCodec.BitWriter
+    val bw = new graft.functions.BitWriter
     def bits(s: String): Unit = s.foreach(c => bw.add(if (c == '1') 1L else 0L, 1))
     def simpleSingle(sym: Int): Unit = {
       bw.add(1L, 1); bw.add(0L, 1)

@@ -2,18 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.ZstdCodec
+import graft.functions.{Zstd, ZstdCodec}
 
-/** RFC 8878 full codec, validated against the REFERENCE zstd
-  * implementation (zstd-jni, already on the Spark classpath) in both
-  * directions:
-  *   - our compressor's frames must decode with reference zstd
-  *     (checksum verified by the native side),
-  *   - reference-compressed frames at several levels (which exercise
-  *     repeat offsets, treeless literals, custom FSE tables, RLE
-  *     blocks, 4-stream Huffman) must decode with our decoder.
-  * Plus truncation/bit-flip checks that damage is null, never a wrong
-  * answer, and multi-frame/skippable walking. */
+/** The zstd codec's contract over libzstd (zstd-jni): frames from
+  * every compression level decode, damage is null and never a wrong
+  * answer, the window and output caps hold, dictionaries load or
+  * refuse, multi-frame and skippable payloads walk, and seekable
+  * shards range-read. */
 class ZstdCodecSpec extends AnyFunSuite {
 
   private def lcgBytes(seed: Long, n: Int, alphabet: Int): Array[Byte] = {
@@ -35,9 +30,6 @@ class ZstdCodecSpec extends AnyFunSuite {
     }
     sb.substring(0, n).getBytes("US-ASCII")
   }
-
-  private def jniDecompress(frame: Array[Byte], expectLen: Int): Array[Byte] =
-    com.github.luben.zstd.Zstd.decompress(frame, math.max(expectLen, 1))
 
   private def jniCompress(src: Array[Byte], level: Int, checksum: Boolean): Array[Byte] = {
     val ctx = new com.github.luben.zstd.ZstdCompressCtx()
@@ -72,22 +64,25 @@ class ZstdCodecSpec extends AnyFunSuite {
         s = s * 6364136223846793005L + 1442695040888963407L
         (128 + ((s >>> 33) % 64)).toByte
       }
-    })
+    },
+    "mixed" -> (0 until 40).map { i => // runs, word salad, binary islands
+      if (i % 3 == 0) Array.fill(1000 + i * 13)((i + 'A').toByte)
+      else if (i % 3 == 1) textLike(i, 2000)
+      else lcgBytes(i, 500, 200)
+    }.reduce(_ ++ _))
 
-  test("our frames decode with reference zstd (both table modes)") {
-    for ((name, src) <- corpus; explicit <- Seq(false, true)) {
-      val frame = ZstdCodec.compress(src, explicit)
-      val back = jniDecompress(frame, src.length)
-      assert(back.sameElements(src), s"$name explicit=$explicit")
-      // and with our own decoder
-      val mine = ZstdCodec.decompress(frame)
-      assert(mine.exists(_.sameElements(src)), s"$name self explicit=$explicit")
+  test("corpus round-trips through compress and decompress") {
+    for ((name, src) <- corpus) {
+      val frame = ZstdCodec.compress(src)
+      assert(Zstd.frameMeta(frame).contentSize.contains(src.length.toLong), name)
+      assert(Zstd.frameMeta(frame).checksum, name)
+      assert(ZstdCodec.decompress(frame).exists(_.sameElements(src)), name)
     }
   }
 
   test("compression is real: doubled text shrinks well below raw") {
     val t = textLike(10, 20000)
-    val frame = ZstdCodec.compress(t ++ t, explicitTables = false)
+    val frame = ZstdCodec.compress(t ++ t)
     assert(frame.length < t.length, // < half of raw: the self-match fires
       s"expected < ${t.length}, got ${frame.length}")
   }
@@ -106,24 +101,30 @@ class ZstdCodecSpec extends AnyFunSuite {
     val a = textLike(20, 4000)
     val b = lcgBytes(21, 1000, 26)
     val skippable = Array[Byte](0x52, 0x2a, 0x4d, 0x18, 4, 0, 0, 0, 1, 2, 3, 4)
-    val payload = ZstdCodec.compress(a, false) ++ skippable ++
+    val payload = ZstdCodec.compress(a) ++ skippable ++
       jniCompress(b, 3, true)
     val out = ZstdCodec.decompress(payload)
     assert(out.exists(_.sameElements(a ++ b)))
-    // skippable-only payload has no content frame -> null
+    // a payload with no content frame -> null; a frame of no bytes is
+    // content
     assert(ZstdCodec.decompress(skippable).isEmpty)
+    assert(ZstdCodec.decompress(skippable ++ skippable).isEmpty)
+    assert(ZstdCodec.decompress(Array.empty[Byte]).isEmpty)
+    val none = ZstdCodec.compress(Array.empty[Byte])
+    assert(ZstdCodec.decompress(none).exists(_.isEmpty))
+    assert(ZstdCodec.decompress(skippable ++ none ++ skippable).exists(_.isEmpty))
   }
 
   test("truncation at every byte -> null (never a wrong answer)") {
     val src = textLike(30, 3000)
-    val frame = ZstdCodec.compress(src, explicitTables = true)
+    val frame = ZstdCodec.compress(src)
     for (cut <- Mutations.truncations(frame))
       assert(ZstdCodec.decompress(cut).isEmpty, s"truncated at ${cut.length} decoded to Some")
   }
 
   test("single-byte corruption -> null or the original (checksum gate)") {
     val src = textLike(31, 2000)
-    val frame = ZstdCodec.compress(src, explicitTables = false)
+    val frame = ZstdCodec.compress(src)
     for (bad <- Mutations.bitFlips(frame, 8 * frame.length, 41L)) {
       val r = ZstdCodec.decompress(bad)
       assert(r.isEmpty || r.exists(_.sameElements(src)), s"flip in ${bad.toSeq}")
@@ -143,21 +144,26 @@ class ZstdCodecSpec extends AnyFunSuite {
   }
 
   test("reserved block type and FHD reserved bit -> null") {
-    val okFrame = ZstdCodec.compress("abcdef".getBytes, false)
+    val okFrame = ZstdCodec.compress("abcdef".getBytes)
     val badFhd = okFrame.clone()
     badFhd(4) = (badFhd(4) | 0x08).toByte // FHD reserved bit
     assert(ZstdCodec.decompress(badFhd).isEmpty)
+    // single-segment, 1-byte content size, then a last block of the
+    // reserved type 3; the same frame with a raw block decodes
+    val frame = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0x20, 0x01)
+    assert(ZstdCodec.decompress(frame ++ Array[Byte](0x09, 0, 0, 'A')).exists(_.sameElements("A".getBytes)))
+    assert(ZstdCodec.decompress(frame ++ Array[Byte](0x0f, 0, 0, 'A')).isEmpty)
     assert(ZstdCodec.decompress("not zstd at all".getBytes).isEmpty)
     assert(ZstdCodec.decompress(null).isEmpty)
     assert(ZstdCodec.decompress(Array.empty[Byte]).isEmpty)
   }
 
   test("xxh64 matches the reference checksum end-to-end") {
-    // jni verifies the checksum our compressor writes; additionally pin
-    // a few known xxh64 values (seed 0) from the published test vectors
-    assert(ZstdCodec.xxh64(Array.empty[Byte], 0, 0) == 0xef46db3751d8e999L)
-    val abc = "abc".getBytes("US-ASCII")
-    assert(ZstdCodec.xxh64(abc, 0, 3) == 0x44bc2cf5ad770999L)
+    // the seek table's member checksum; known xxh64 values (seed 0)
+    // from the published test vectors
+    import graft.functions.ZstdSeekable
+    assert(ZstdSeekable.xxh64(Array.empty[Byte]) == 0xef46db3751d8e999L)
+    assert(ZstdSeekable.xxh64("abc".getBytes("US-ASCII")) == 0x44bc2cf5ad770999L)
   }
 
   test("TRAINED structured dictionaries (reference-built) decode: " +
@@ -193,7 +199,7 @@ class ZstdCodecSpec extends AnyFunSuite {
     for (seed <- 70L until 78L) {
       val src = textLike(seed, 1500)
       // ours-compress -> reference-decompress with the same raw dict
-      val frame = ZstdCodec.compressWithDict(src, dict)
+      val frame = ZstdCodec.compressWithDict(src, dict).get
       val dctx = new com.github.luben.zstd.ZstdDecompressCtx()
       val back = try { dctx.loadDict(dict); dctx.decompress(frame, src.length) }
         finally dctx.close()
@@ -205,7 +211,7 @@ class ZstdCodecSpec extends AnyFunSuite {
     // the dict genuinely helps: text whose first half IS the dict
     val half = textLike(99, 400)
     val doc = half ++ textLike(100, 400)
-    val withD = ZstdCodec.compressWithDict(doc, half)
+    val withD = ZstdCodec.compressWithDict(doc, half).get
     val withoutD = ZstdCodec.compress(doc)
     assert(withD.length < withoutD.length,
       s"dict should shrink: ${withD.length} vs ${withoutD.length}")
@@ -213,6 +219,7 @@ class ZstdCodecSpec extends AnyFunSuite {
     val junk = Array[Byte](0x37, 0xa4.toByte, 0x30, 0xec.toByte, 1, 2, 3, 4, 5)
     assert(ZstdCodec.decompressWithDict(withD, junk).isEmpty)
     assert(ZstdCodec.decompressWithDict(withD, null).isEmpty)
+    assert(ZstdCodec.compressWithDict(doc, junk).isEmpty)
   }
 
   test("pure-random blobs never throw and never 'decode' (10k fuzz)") {
@@ -239,6 +246,13 @@ class ZstdCodecSpec extends AnyFunSuite {
     bomb.write(0x00) // FHD: no content size, window descriptor follows
     bomb.write(0xff) // max window descriptor (clamped by MaxWindow gate)
     assert(ZstdCodec.decompress(bomb.toByteArray).isEmpty) // window too big
+    // the window cap is exact: a frame declaring Limits.ZstdWindow
+    // (2^27) decodes, one declaring 2^28 does not
+    def windowed(descriptor: Int) = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0x00,
+      descriptor.toByte, 0x09, 0, 0, 'A')
+    assert(graft.functions.Limits.ZstdWindow == 1L << 27)
+    assert(ZstdCodec.decompress(windowed(17 << 3)).exists(_.sameElements("A".getBytes)))
+    assert(ZstdCodec.decompress(windowed(18 << 3)).isEmpty)
     val bomb2 = new java.io.ByteArrayOutputStream()
     bomb2.write(Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte), 0, 4)
     bomb2.write(0x00)
@@ -312,20 +326,5 @@ class ZstdCodecSpec extends AnyFunSuite {
     // empty shard: zero members is a valid table
     val empty = ZstdSeekable.pack(Array.empty)
     assert(ZstdSeekable.seekTable(empty).exists(_.isEmpty))
-  }
-
-  test("large random-structured input with explicit tables round-trips") {
-    // mixed structure: repetitive runs + word salad + binary islands
-    val parts = (0 until 40).map { i =>
-      if (i % 3 == 0) Array.fill(1000 + i * 13)((i + 'A').toByte)
-      else if (i % 3 == 1) textLike(i, 2000)
-      else lcgBytes(i, 500, 200)
-    }
-    val src = parts.reduce(_ ++ _)
-    for (explicit <- Seq(false, true)) {
-      val frame = ZstdCodec.compress(src, explicit)
-      assert(jniDecompress(frame, src.length).sameElements(src))
-      assert(ZstdCodec.decompress(frame).exists(_.sameElements(src)))
-    }
   }
 }
