@@ -1006,10 +1006,15 @@ class StreamingSpec extends SparkSpec {
       val q = agg.writeStream.outputMode("complete")
         .format("memory").queryName("listener_agg").start()
       q.processAllAvailable(); q.stop()
-      // listener events are delivered asynchronously
-      val deadline = System.nanoTime() + 10e9.toLong
-      while ((listener.rows < 2 || listener.terminations < 1) &&
+      // listener events are delivered asynchronously, on the listener
+      // bus thread, which a loaded host can hold back for seconds: wait
+      // for THIS query's totals, not whatever the session has seen
+      val deadline = System.nanoTime() + 60e9.toLong
+      while ((listener.rowsFor(q.id) < 2 || listener.terminations < 1) &&
         System.nanoTime() < deadline) Thread.sleep(50)
+      assert(listener.rowsFor(q.id) >= 2,
+        s"rows=${listener.rowsFor(q.id)} batches=${listener.batchesFor(q.id)}")
+      assert(listener.batchesFor(q.id) >= 1)
       assert(listener.rows >= 2)
       assert(listener.batches >= 1)
       // F4: termination fires the final summary (>= 1: listener events
