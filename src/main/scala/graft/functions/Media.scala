@@ -3284,8 +3284,7 @@ object Jpeg {
               ((w * hS(c) + hmax - 1) / hmax + 7) / 8)
             ownH = Array.tabulate(ncomp)(c =>
               ((h * vS(c) + vmax - 1) / vmax + 7) / 8)
-            coefs = Array.tabulate(ncomp)(c =>
-              new Array[Int](padW(c) * padH(c) * 64))
+            coefs = null // sized from this frame at its first scan
             dcPred = new Array[Int](ncomp)
           case sof if sof >= 0xc0 && sof <= 0xcf && sof != 0xc4 &&
             sof != 0xc8 && sof != 0xcc =>
@@ -3294,7 +3293,7 @@ object Jpeg {
             if (len != 4) return None
             restartInterval = be16i(seg)
           case 0xda => // SOS: scan header + entropy data
-            if (coefs == null) return None
+            if (padW == null) return None
             val ns = u8(seg)
             if (ns < 1 || ns > ncomp || len != 6 + 2 * ns) return None
             val scanComps = new Array[Int](ns)
@@ -3318,8 +3317,21 @@ object Jpeg {
             if (ss > 63 || se > 63 || se < ss || al > 13) return None
             if (ss == 0 && se != 0) return None // DC scans are DC-only
             if (ss > 0 && ns != 1) return None // AC scans: one component
-            if (ss == 0 && ah == 0) java.util.Arrays.fill(dcPred, 0)
             val c0 = scanComps(0)
+            if (coefs == null) {
+              // the frame's first scan must be a DC scan (T.81 G.1.1.1.1),
+              // and each of its blocks takes at least one bit: a declared
+              // size the bytes left cannot cover is refused before the
+              // coefficient stores are allocated
+              if (ss != 0) return None
+              val units =
+                if (ns > 1) mcuW.toLong * mcuH * scanComps.map(c => hS(c) * vS(c)).sum
+                else ownW(c0).toLong * ownH(c0)
+              if (8L * (b.length - (q + 1 + len)) < units) return None
+              coefs = Array.tabulate(ncomp)(c =>
+                new Array[Int](padW(c) * padH(c) * 64))
+            }
+            if (ss == 0 && ah == 0) java.util.Arrays.fill(dcPred, 0)
             val next = decodeProgressiveScan(b, q + 1 + len, scanComps,
               scanDc, scanAc, ss, se, ah, al, coefs, dcPred,
               ns > 1, mcuW, mcuH, hS, vS, padW,

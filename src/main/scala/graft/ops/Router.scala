@@ -32,10 +32,14 @@ object Router {
 
   /** R4 validation predicate (consumer.py:228-229, 249-250, 355-360):
     * decode failure surfaces as a null struct upstream; here null/empty
-    * orderId or product, null price, or negative price. */
+    * orderId or product, null price, or negative price. Emptiness is
+    * `=== ""`, not `length(x) === 0`: a string has no characters only if
+    * it has no bytes, so the two agree (null stays null), and the
+    * comparison does not walk the UTF-8 bytes of every row to count
+    * characters. */
   def invalid(orderId: Column, product: Column, price: Column): Column =
-    orderId.isNull || length(orderId) === 0 ||
-      product.isNull || length(product) === 0 ||
+    orderId.isNull || orderId === "" ||
+      product.isNull || product === "" ||
       price.isNull || price < 0
 
   /** R5 three-way router as a single status column. */
@@ -57,7 +61,7 @@ object Router {
       decodeFailed: Column = lit(false)): Column =
     when(decodeFailed, "Processing error: Failed to deserialize Avro message")
       .when(price.isNull, "Processing error: Missing price field")
-      .when(orderId.isNull || length(orderId) === 0 || product.isNull || length(product) === 0,
+      .when(orderId.isNull || orderId === "" || product.isNull || product === "",
         "Processing error: Invalid order payload")
       .when(price < 0, format_string("Processing error: Invalid price: %.2f", price))
       .otherwise(format_string("Price exceeds threshold: %.2f > 1000.0", price))

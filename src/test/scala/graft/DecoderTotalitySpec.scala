@@ -216,6 +216,20 @@ class DecoderTotalitySpec extends AnyFunSuite {
     assert(allocated < (1L << 20), s"one call allocated ${allocated >> 10} KiB")
   }
 
+  test("jpeg_stats_ycbcr: a forged frame width is refused before its coefficient stores are allocated") {
+    val seed = Jpeg.encodeProgressiveColor(17, 13, ramp(663, 37))
+    val sof = seed.indices.find(i => (seed(i) & 0xff) == 0xff && (seed(i + 1) & 0xff) == 0xc2).get
+    val forged = seed.clone()
+    forged(sof + 7) = 0xff.toByte; forged(sof + 8) = 0xff.toByte // width 65535: 49152 blocks
+    assert(Jpeg.decodeProgressive(forged).isEmpty)
+    val allocated = Mutations.allocatedBy(Jpeg.decodeProgressive(forged))
+    assert(allocated < (1L << 20), s"one call allocated ${allocated >> 10} KiB")
+    // the bound never refuses a whole stream (JpegSpec pins the pixels)
+    for ((s, shape) <- Seq(seed -> (17, 13, 3), Jpeg.encodeProgressive420(17, 13, ramp(663, 37)) -> (17, 13, 3),
+        Jpeg.encodeProgressive(24, 18, ramp(432, 9)) -> (24, 18, 1)))
+      assert(Jpeg.decodeProgressive(s).map(d => (d._1, d._2, d._3)) === Some(shape))
+  }
+
   test("tiff_stats: u32 sides whose product wraps negative decode to null") {
     // 110 bytes, little-endian, 8 entries: ImageWidth 0xFFFFFFFF,
     // ImageLength 0x80000001, 8-bit grey, uncompressed, one strip

@@ -7,6 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.MultiSinkParquet
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.avro.AvroOcf
 import graft.model.{Envelope, Header, Schemas}
@@ -1106,6 +1109,15 @@ class StreamingSpec extends SparkSpec {
     finally walk.close()
   }
 
+  /** The footer of every Parquet file under `dir`. */
+  private def footers(dir: String): Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] =
+    filesUnder(dir).filter(_.endsWith(".parquet")).map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/$f"), spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try reader.getFooter finally reader.close()
+    }
+
   test("one-job fan-out writes what three writes over a persisted batch wrote") {
     val batch = mixedBatch(120)
     val out = tmpDir("graft-onejob-out")
@@ -1113,8 +1125,17 @@ class StreamingSpec extends SparkSpec {
     OrderPipeline.writeFanOut(batch, batchId = 4, out)
     threeWriteFanOut(batch, batchId = 4, ref)
     assertSameSinks(out, ref)
+    val rowSchema = "org.apache.spark.sql.parquet.row.metadata"
     Seq("success", "dlq", "retry").foreach { sink =>
       assert(spark.read.parquet(s"$out/$sink").count() > 0, s"$sink got no rows")
+      // each sink's own write schema rides on the one shared job conf
+      val want = footers(s"$ref/$sink").map(_.getFileMetaData.getKeyValueMetaData.get(rowSchema)).distinct
+      assert(want.size === 1, sink)
+      for (footer <- footers(s"$out/$sink")) {
+        assert(footer.getFileMetaData.getKeyValueMetaData.get(rowSchema) === want.head, sink)
+        val dictionary = footer.getBlocks.asScala.flatMap(_.getColumns.asScala).filter(_.hasDictionaryPage)
+        assert(dictionary.isEmpty, s"$sink: dictionary pages in ${dictionary.map(_.getPath.toDotString)}")
+      }
     }
     // the one job's commit marker sits at the root, not in the sinks
     assert(new java.io.File(s"$out/_SUCCESS").exists())
@@ -1169,6 +1190,38 @@ class StreamingSpec extends SparkSpec {
     OrderPipeline.writeFanOut(batch, batchId = 9, out)
     assertSameSinks(out, ref)
     assert(!filesUnder(out).exists(_.contains("_temporary")))
+  }
+
+  test("the fan-out write leaves no conf broadcast behind, committed or failed") {
+    val failOnce = udf { (id: Long) =>
+      if (id == 7L && FanOutFault.armed.getAndSet(false)) throw new IllegalStateException("injected fault")
+      id
+    }
+    // a range, as a local relation would be folded (UDF and all) at
+    // planning: the input plan broadcasts nothing itself
+    val sinks = spark.range(0, 20, 1, 2).select(struct(failOnce(col("id")).as("id")).as("all"),
+      when(col("id") % 3 === 0, struct(col("id").cast("string").as("name"))).as("thirds"))
+    // every job also broadcasts its stage's task binary, which the
+    // context cleaner removes later: look for broadcast Hadoop confs
+    val blocks = org.apache.spark.SparkEnv.get.blockManager
+    def confBroadcasts() = blocks.getMatchingBlockIds {
+      case b: org.apache.spark.storage.BroadcastBlockId => b.field.isEmpty
+      case _ => false
+    }.filter(b => blocks.getLocalValues(b).exists(_.data.toList.exists(
+      _.getClass.getName == "org.apache.spark.util.SerializableConfiguration"))).toSet
+    val out = tmpDir("graft-onejob-broadcast")
+    for (fail <- Seq(true, false)) {
+      val before = confBroadcasts()
+      FanOutFault.armed.set(fail)
+      if (fail) intercept[Exception](MultiSinkParquet.write(sinks, out, "batch=1"))
+      else MultiSinkParquet.write(sinks, out, "batch=1")
+      assert(!FanOutFault.armed.get())
+      eventually(timeout(Span(10, Seconds))) {
+        val left = confBroadcasts() -- before
+        assert(left.isEmpty, s"${if (fail) "after an abort" else "after a commit"}: $left")
+      }
+    }
+    assert(spark.read.parquet(s"$out/thirds/batch=1").count() === 7)
   }
 
   test("streaming dedup drops redelivered messages") {
